@@ -15,11 +15,61 @@ final case class Q(
 
 trait QModule { def all: Seq[Q] }
 
-/** Loaders for the driver-provided parquet tables (TESTDATA.md). */
+/** Loaders for the driver-provided parquet tables (TESTDATA.md).
+  *
+  * Every read goes through [[read]], which infers a table's schema once
+  * per (session, path, file fingerprint) and declares it on later reads.
+  * Inference costs a Spark job (parquet footer read) and ~75 ms of serial
+  * driver wall per read; the same read with a declared schema costs
+  * ~8 ms and no job (4-vCPU host). A served search reads one to three
+  * input tables per call, so inference would dominate a warm call's TVF
+  * expansion.
+  *
+  * The fingerprint is the leaf files' names, lengths and modification
+  * times: overwriting a table at the same path (new part files, or the
+  * same file rewritten) changes it, so the next read re-infers the new
+  * schema and never serves a stale one. Declaring the inferred schema
+  * cannot change a value — parquet resolves columns by name, and the
+  * declared schema is exactly what inference returned in this session
+  * (the parquet inference confs, e.g. `nanosAsLong`, are fixed at
+  * [[GraftSession.build]]). A miss returns the inferred frame itself, so
+  * a first read costs an undeclared read plus one file listing.
+  */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else read(spark, path(dir, name))
+
+  private[graft] def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
+  /** `spark.read.parquet(path)` with the schema inferred once per
+    * (session, path, [[fingerprint]]), through [[Memo.cachedValue]]. */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+    var inferred: DataFrame = null
+    val schema = Memo.cachedValue(spark, s"table-schema:$path@${fingerprint(spark, path)}") {
+      inferred = spark.read.parquet(path)
+      inferred.schema
+    }
+    if (inferred != null) inferred else spark.read.schema(schema).parquet(path)
+  }
+
+  /** Digest of the leaf files' (name, length, modification time) under
+    * `path` — one FileSystem listing, no Spark job. A missing path
+    * digests to "absent"; its read then fails exactly as Spark's does. */
+  private[graft] def fingerprint(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val leaves = scala.collection.mutable.ArrayBuffer.empty[String]
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        leaves += s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
+      }
+      java.util.UUID.nameUUIDFromBytes(
+        leaves.sorted.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
+    } catch { case _: java.io.FileNotFoundException => "absent" }
+  }
 
   /** The events table exposes both an exact `ts_ns` epoch-nanos long (for
     * total ordering and µs-precision comparisons) and a micros `ts`
@@ -41,7 +91,7 @@ object Tables {
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.LongType
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = read(spark, path(dir, "events"))
     raw.schema("ts").dataType match {
       case LongType =>
         raw

@@ -63,14 +63,33 @@ object Ann extends QModule {
 
   private def duckLcgU(key: String): String = Functions.duckKeyLcgU(key)
 
-  /** The coarse-quantizer centroid set: the [[centroidCount]] corpus
-    * vectors with the smallest key-LCG variate — deterministic
-    * hash-based selection, fixed size at any corpus scale.
-    * `orderBy(u).limit(C)` plans as TakeOrdered: per-partition top-C,
-    * driver merges p×C rows — never a global sort, never a linear
-    * collect. */
-  def centroids(s: SparkSession, d: String): DataFrame =
-    centroidsOf(s, emb(s, d))
+  /** The coarse-quantizer centroid set (centroid_id, ce) as a local
+    * relation over [[centroidArray]]. */
+  def centroids(s: SparkSession, d: String): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(
+      centroidArray(s, d).toSeq.map { case (cid, ce) => org.apache.spark.sql.Row(cid, ce) }.asJava,
+      CentroidsSchema)
+  }
+
+  /** The coarse-quantizer centroids as (centroid_id, ce) sorted by id:
+    * the [[centroidCount]] corpus vectors with the smallest key-LCG
+    * variate — deterministic hash-based selection, fixed size at any
+    * corpus scale. `orderBy(u).limit(C)` plans as TakeOrdered:
+    * per-partition top-C, driver merges p×C rows — never a global sort,
+    * never a linear collect. Memoized per (session, dir, C, embeddings
+    * fingerprint — [[graft.Tables.fingerprint]]), so a warm served call
+    * never rescans the corpus for centroids, while a different C or a
+    * rewritten corpus selects afresh. The arrays are shared by every
+    * caller in the session: read-only. */
+  def centroidArray(s: SparkSession, d: String): Array[(Long, Array[Float])] = {
+    val c = centroidCount(s)
+    val fp = Tables.fingerprint(s, Tables.path(d, "embeddings"))
+    graft.Memo.cachedValue(s, s"ann-centroids:$d:c$c@$fp") {
+      import s.implicits._
+      centroidsOf(s, emb(s, d)).as[(Long, Array[Float])].collect().sortBy(_._1)
+    }
+  }
 
   /** [[centroids]] over an arbitrary (vec_id, embedding) frame — the
     * incremental build trains its FROZEN quantizer on the base corpus
@@ -462,7 +481,15 @@ object Ann extends QModule {
     * resolves columns BY NAME, so declaring them cannot change a value.
     * For the partitioned index, `centroid_id` is declared BIGINT so the
     * partition values parse long directly (the post-read `.cast("long")`
-    * sites become no-ops). */
+    * sites become no-ops).
+    *
+    * INPUT tables have no engine-side writer, so their schema cannot be
+    * a constant: [[graft.Tables.read]] infers it once per (session, path,
+    * file fingerprint) and declares it on every later read. The
+    * fingerprint is the leaf files' names, lengths and modification
+    * times, so a table rewritten at the same path re-infers. The coarse
+    * centroids derived from the embeddings table are memoized under the
+    * same fingerprint ([[centroidArray]]). */
   private def ddl(s: String) = org.apache.spark.sql.types.StructType.fromDDL(s)
   private[operators] val IndexDataSchema =
     ddl("doc_id BIGINT, label INT, embedding ARRAY<FLOAT>")
@@ -495,8 +522,7 @@ object Ann extends QModule {
     val (fs, success) = hfs(s, s"$path/_SUCCESS")
     if (!fs.exists(success)) {
       val t0 = System.nanoTime()
-      val cs = centroids(s, d)
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
+      val cs = centroidArray(s, d)
       // label rides into the artifact (still one narrow pass — it's a
       // column of the same scan) so metadata predicates prune at the
       // index scan itself: partition pruning on centroid_id AND parquet
@@ -595,6 +621,36 @@ object Ann extends QModule {
       .filter($"query_id" =!= $"doc_id")
       .select($"query_id", $"doc_id",
         Functions.vecDot($"qe", $"embedding").as("score"), $"prn")
+  }
+
+  /** Driver-side probe selection for the code-scan tiers ([[Sq]], [[Pq]]):
+    * each query's top-`nProbe` centroids by dot desc, centroid_id asc —
+    * the v09 probe contract, on the array-order double dot the oracle's
+    * unnest sum uses. Returns centroid_id → indices (into `queries`) of
+    * the queries probing it, and centroid_id → every query's coarse dot. */
+  private[operators] def probeLists(
+      queries: Array[(Long, Array[Float])],
+      cents: Array[(Long, Array[Float])],
+      nProbe: Int): (Map[Long, Array[Int]], Map[Long, Array[Double]]) = {
+    val dots = cents.map { case (cid, _) => cid -> new Array[Double](queries.length) }.toMap
+    val byCid = scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Int]]
+    queries.zipWithIndex.foreach { case ((_, qv), qi) =>
+      cents
+        .map { case (cid, cv) =>
+          val n = math.min(qv.length, cv.length)
+          var sc = 0.0
+          var i = 0
+          while (i < n) { sc += qv(i).toDouble * cv(i).toDouble; i += 1 }
+          dots(cid)(qi) = sc
+          (cid, sc)
+        }
+        .sortBy { case (cid, sc) => (-sc, cid) }
+        .take(nProbe)
+        .foreach { case (cid, _) =>
+          byCid.getOrElseUpdate(cid, scala.collection.mutable.ArrayBuffer.empty) += qi
+        }
+    }
+    (byCid.iterator.map { case (cid, qis) => cid -> qis.toArray }.toMap, dots)
   }
 
   /** V3/V5 search: top-k per query with nProbe probed partitions. Final
@@ -3257,7 +3313,7 @@ object Ann extends QModule {
     graft.PathLocks.withLock(merged) { // see [[buildIndex]]'s race note
       val (fs, done) = hfs(s, s"$merged/_SUCCESS")
       if (!fs.exists(done)) {
-        val cs = centroids(s, d).as[(Long, Array[Float])].collect().sortBy(_._1)
+        val cs = centroidArray(s, d)
         val shardPaths = (0 until 2).map { r =>
           val sp = s"${shardRoot(s, d)}/shard$r"
           writeIndexArtifact(s, sp, corpusTyped(s, d).filter($"id" % 2 === r), cs)

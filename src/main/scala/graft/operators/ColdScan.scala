@@ -133,9 +133,19 @@ object ColdScan {
     } finally indexed.unpersist(blocking = true)
   }
 
+  // Declared read schemas of the artifacts [[ensureArtifacts]] writes
+  // (the [[Ann]] "declared artifact read schemas" rule: no footer-
+  // inference job per read; parquet resolves columns by name).
+  private def ddl(s: String) = org.apache.spark.sql.types.StructType.fromDDL(s)
+  private val FloatSchema = ddl("id BIGINT, cid INT, vec ARRAY<FLOAT>")
+  private val CodeSchema = ddl("id BIGINT, cid INT, code BINARY")
+  private val WordsSchema = ddl("id BIGINT, cid INT, words ARRAY<BIGINT>")
+  private val VecSidecarSchema = ddl("idx INT, vec ARRAY<FLOAT>")
+  private val BoundsSchema = ddl("idx INT, lo DOUBLE, hi DOUBLE")
+
   private def readVecSidecar(spark: SparkSession, path: String): Array[Array[Float]] = {
     import spark.implicits._
-    spark.read.parquet(path).select("idx", "vec").as[(Int, Array[Float])]
+    spark.read.schema(VecSidecarSchema).parquet(path).select("idx", "vec").as[(Int, Array[Float])]
       .collect().sortBy(_._1).map(_._2)
   }
 
@@ -162,7 +172,7 @@ object ColdScan {
       queries: Array[(Long, Array[Float])], k: Int): Array[Array[Long]] = {
     import spark.implicits._
     val bcQ = spark.sparkContext.broadcast(queries)
-    val perPart = spark.read.parquet(path).select("id", "vec")
+    val perPart = spark.read.schema(FloatSchema).parquet(path).select("id", "vec")
       .as[(Long, Array[Float])].rdd.mapPartitions { rows =>
         val qs = bcQ.value
         val heaps = Array.fill(qs.length)(new TopKAgg.Heap(k))
@@ -210,7 +220,7 @@ object ColdScan {
     val sc = spark.sparkContext
     val bcW = sc.broadcast(w)
     val bcQlo = sc.broadcast(qlo)
-    val perPart = spark.read.parquet(path).select("id", "code")
+    val perPart = spark.read.schema(CodeSchema).parquet(path).select("id", "code")
       .as[(Long, Array[Byte])].rdd.mapPartitions { rows =>
         val ws = bcW.value
         val qls = bcQlo.value
@@ -273,7 +283,7 @@ object ColdScan {
     val bcLut = sc.broadcast(lut)
     val bcQc = sc.broadcast(qdotc)
     val nCent = cents.length
-    val perPart = spark.read.parquet(path).select("id", "cid", "code")
+    val perPart = spark.read.schema(CodeSchema).parquet(path).select("id", "cid", "code")
       .as[(Long, Int, Array[Byte])].rdd.mapPartitions { rows =>
         val lt = bcLut.value
         val qc = bcQc.value
@@ -345,7 +355,7 @@ object ColdScan {
     val bcLut = sc.broadcast(lut)
     val bcQc = sc.broadcast(qdotc)
     val nCent = cents.length
-    val perPart = spark.read.parquet(path).select("id", "cid", "words")
+    val perPart = spark.read.schema(WordsSchema).parquet(path).select("id", "cid", "words")
       .as[(Long, Int, Array[Long])].rdd.mapPartitions { rows =>
         val lt = bcLut.value
         val qc = bcQc.value
@@ -451,7 +461,7 @@ object ColdScan {
     val codebook = readVecSidecar(spark, s"$root/_codebook")
     val bounds = {
       import spark.implicits._
-      spark.read.parquet(s"$root/_sq_bounds").select("idx", "lo", "hi")
+      spark.read.schema(BoundsSchema).parquet(s"$root/_sq_bounds").select("idx", "lo", "hi")
         .as[(Int, Double, Double)].collect().sortBy(_._1)
     }
     val lo = bounds.map(_._2)

@@ -459,15 +459,6 @@ object Pq extends QModule {
   // list's residual cloud is centered at the origin, so the shared
   // codebook spends its codewords on local structure, not list offsets.
 
-  private def ivfCents(s: SparkSession, d: String): Array[(Long, Array[Float])] = {
-    import s.implicits._
-    Ann.centroids(s, d)
-      .select($"centroid_id".cast("long"), $"ce")
-      .as[(Long, Array[Float])]
-      .collect()
-      .sortBy(_._1)
-  }
-
   /** Memoized residual frame (doc_id, resid, centroid_id, label): every
     * corpus vector assigned to its nearest coarse centroid (max dot,
     * ties to the smallest id — the v09 assignment contract), residual
@@ -476,7 +467,7 @@ object Pq extends QModule {
   private def residFrame(s: SparkSession, d: String): DataFrame =
     graft.Memo.cached(s, s"ivfpq-resid:$d") {
       import s.implicits._
-      val bcC = s.sparkContext.broadcast(ivfCents(s, d))
+      val bcC = s.sparkContext.broadcast(Ann.centroidArray(s, d))
       corpusDsTagged(s, d)
         .mapPartitions { rows =>
           val cs = bcC.value
@@ -633,7 +624,7 @@ object Pq extends QModule {
     val encodedAll = graft.Memo.cached(s, s"ivfpq-encoded:$d")(
       encodeResidTagged(residFrame(s, d), rcb))
     val encoded = pred.foldLeft(encodedAll)(_ filter _)
-    searchIvfPqFrom(s, d, encoded, rcb, ivfCents(s, d), maxQueryId, k, nProbe, rcand)
+    searchIvfPqFrom(s, d, encoded, rcb, Ann.centroidArray(s, d), maxQueryId, k, nProbe, rcand)
   }
 
   /** The IVF+PQ pipeline over arbitrary (encoded frame, codebook,
@@ -654,27 +645,8 @@ object Pq extends QModule {
     require(rcand <= RCand, s"rcand $rcand exceeds the per-partition ADC heap bound $RCand")
     val queries = corpusDs(s, d).filter($"id" < maxQueryId).collect().sortBy(_._1)
     // probe sets + first-stage coarse dots, computed once driver-side
-    // (C × nq doubles) with the same array-order double accumulation as
-    // the oracle's unnest sum
-    val byCid = scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Int]]
-    val qcDots = cents.map { case (cid, _) => cid -> new Array[Double](queries.length) }.toMap
-    queries.zipWithIndex.foreach { case ((_, qv), qi) =>
-      cents
-        .map { case (cid, cv) =>
-          val n = math.min(qv.length, cv.length)
-          var sc = 0.0
-          var i = 0
-          while (i < n) { sc += qv(i).toDouble * cv(i).toDouble; i += 1 }
-          qcDots(cid)(qi) = sc
-          (cid, sc)
-        }
-        .sortBy { case (cid, sc) => (-sc, cid) }
-        .take(nProbe)
-        .foreach { case (cid, _) =>
-          byCid.getOrElseUpdate(cid, scala.collection.mutable.ArrayBuffer.empty) += qi
-        }
-    }
-    val probes = byCid.iterator.map { case (cid, qis) => cid -> qis.toArray }.toMap
+    // (C × nq doubles)
+    val (probes, qcDots) = Ann.probeLists(queries, cents, nProbe)
     val cands = BruteForce
       .rerank(
         adcProbedResid(encoded, rcb, queries, probes, qcDots).withColumnRenamed("approx", "score"),
@@ -703,7 +675,7 @@ object Pq extends QModule {
         val spark = s
         import spark.implicits._
         val rcb = residCodebook(s, d)
-        ivfCents(s, d).toSeq.toDF("centroid_id", "ce")
+        Ann.centroidArray(s, d).toSeq.toDF("centroid_id", "ce")
           .write.mode("overwrite").parquet(s"$path/centroids")
         rcb.toSeq.toDF("code_id", "ce")
           .write.mode("overwrite").parquet(s"$path/codebook")

@@ -357,10 +357,7 @@ object Sq extends QModule {
       pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     import s.implicits._
     val (lo, hi) = graft.Memo.cachedValue(s, s"sq-bounds:$d")(trainBounds(corpusDs(s, d)))
-    val cents = Ann.centroids(s, d)
-      .select($"centroid_id".cast("long"), $"ce")
-      .as[(Long, Array[Float])]
-      .collect()
+    val cents = Ann.centroidArray(s, d)
     // ONE memoized encoded frame serves filtered and unfiltered alike:
     // the label column rides in the encode (v48), so `pred` is a
     // declarative filter the scan prunes BEFORE the ADC kernel — the
@@ -372,25 +369,7 @@ object Sq extends QModule {
       encodeAssignedTagged(corpusDsTagged(s, d), cents, lo, hi))
     val assigned = pred.foldLeft(assignedAll)(_ filter _)
     val queries = corpusDs(s, d).filter($"id" < maxQueryId).collect().sortBy(_._1)
-    // top-nProbe probe set per query: dot desc, centroid_id asc — the
-    // v09 probe contract, computed with the same array-order double dot
-    val byCid = scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Int]]
-    queries.zipWithIndex.foreach { case ((_, qv), qi) =>
-      cents
-        .map { case (cid, cv) =>
-          val n = math.min(qv.length, cv.length)
-          var sc = 0.0
-          var i = 0
-          while (i < n) { sc += qv(i).toDouble * cv(i).toDouble; i += 1 }
-          (cid, sc)
-        }
-        .sortBy { case (cid, sc) => (-sc, cid) }
-        .take(nProbe)
-        .foreach { case (cid, _) =>
-          byCid.getOrElseUpdate(cid, scala.collection.mutable.ArrayBuffer.empty) += qi
-        }
-    }
-    val probes = byCid.iterator.map { case (cid, qis) => cid -> qis.toArray }.toMap
+    val (probes, _) = Ann.probeLists(queries, cents, nProbe)
     val cands = BruteForce
       .rerank(
         adcProbed(assigned, lo, hi, queries, probes).withColumnRenamed("approx", "score"),

@@ -704,11 +704,7 @@ object VectorSearch extends QModule {
   def knnGraph(s: SparkSession, d: String): DataFrame =
     graft.Memo.cached(s, s"knn-graph:$d") {
       import s.implicits._
-      val cents = Ann.centroids(s, d)
-        .select($"centroid_id".cast("long"), $"ce")
-        .as[(Long, Array[Float])]
-        .collect()
-        .sortBy(_._1)
+      val cents = Ann.centroidArray(s, d)
       val corpus = emb(s, d).select($"vec_id".as("id"), $"embedding".as("vec"))
         .as[(Long, Array[Float])]
       val bcC = s.sparkContext.broadcast(cents)
