@@ -60,12 +60,13 @@ object Functions {
   /** Table-function builder for `ann_search(dir, max_query_id, k,
     * n_probe)`: evaluates the four foldable arguments and expands to the
     * ANALYZED logical plan of [[operators.Ann.search]] — the same
-    * partition-pruned, broadcast-probed plan the Column API produces, so
+    * partition-pruned scan and scoring kernel the Column API produces, so
     * the SQL surface inherits every pushdown and the bounded-heap
     * re-rank rather than re-deriving search semantics in the parser.
     * (The closest public analog is Spark's own range(...) TVF expanding
-    * to a logical Range node.) Index build-if-absent runs at expansion,
-    * like any view materialization side effect. */
+    * to a logical Range node.) Index build-if-absent and the driver-side
+    * probe (one query-vector collect) run at expansion, like any view
+    * materialization side effect. */
   private[graft] def annSearchPlan(
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {

@@ -23,16 +23,18 @@ import graft.{Functions, Q, QModule, Tables}
   * and persisted as parquet PARTITIONED BY centroid_id (K4,
   * build-if-absent like `003:234-257`).
   *
-  * Search (V3/V5): score the query against the tiny centroid set, probe
-  * the top-`nProbe` centroids — a partition-pruned read of the index —
-  * and exact-rescore only those candidates (same normalize-once
-  * dot-product trick, `004:187-196`).
+  * Search (V3/V5): score the queries against the tiny centroid set on
+  * the driver, probe the top-`nProbe` centroids per query — a static
+  * `centroid_id IN (…)` filter, so the index scan lists only the probed
+  * partitions — and exact-rescore only those candidates (same
+  * normalize-once dot-product trick, `004:187-196`) in one scoring
+  * kernel ([[scoredOn]]).
   *
-  * 100 TB design: the index scan is pruned to nProbe/C of the corpus by
-  * the parquet partitioning; candidate scoring uses the codegen'd
-  * [[graft.Functions.vecDot]] expression inside whole-stage codegen; the
-  * per-query candidate set is bounded by nProbe × partition size, so the
-  * final top-k window never sees more than that per query.
+  * 100 TB design: the index scan is pruned to the union of the probed
+  * lists by the parquet partitioning; the kernel scores each row against
+  * only the queries probing its list; the per-query candidate set is
+  * bounded by nProbe × partition size, so the final top-k heap never
+  * sees more than that per query.
   */
 object Ann extends QModule {
 
@@ -561,7 +563,8 @@ object Ann extends QModule {
     }
   }
 
-  /** Partition-pruned index scan: (doc_id, embedding, centroid_id). */
+  /** The index scan: (doc_id, label, embedding, centroid_id).
+    * [[scoredOn]] prunes it to the probed partitions. */
   def loadIndex(s: SparkSession, d: String): DataFrame = {
     val df = s.read.schema(IndexSchema).parquet(buildIndex(s, d))
     df.withColumn("centroid_id", col("centroid_id").cast("long"))
@@ -584,73 +587,106 @@ object Ann extends QModule {
     * filtered-ANN pitfall). */
   def scoredCandidates(
       s: SparkSession, d: String, maxQueryId: Int, maxProbe: Int,
-      pred: Option[Column] = None): DataFrame = {
-    import s.implicits._
-    val q = emb(s, d)
-      .filter($"vec_id" < maxQueryId)
-      .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-    scoredOn(s, q, centroids(s, d), loadIndex(s, d), maxProbe, pred)
+      pred: Option[Column] = None): DataFrame =
+    scoredOn(s, VectorSearch.queryVectors(s, d, maxQueryId), centroidArray(s, d),
+      loadIndex(s, d), maxProbe, pred)
+
+  /** A query frame (query_id, qe) as driver-held arrays for [[scoredOn]]. */
+  private def queryArray(q: DataFrame): Array[(Long, Array[Float])] = {
+    import q.sparkSession.implicits._
+    q.select($"query_id", $"qe").as[(Long, Array[Float])].collect()
   }
 
-  /** The probe-and-score core shared by the default and incremental
-    * index surfaces: probe selection against `cents`, partition-pruned
-    * candidate generation against `index`, exact rescore of candidates.
+  /** The probe-and-score core behind every IVF serving surface (default,
+    * live, versioned, alias, sharded, incremental, graph seeds, sweep):
+    *  1. probe on the driver — [[probeLists]] over the driver-held
+    *     queries and centroids;
+    *  2. prune statically — `centroid_id IN (probed lists)` on the index
+    *     scan, so the file listing keeps only the probed partitions
+    *     (explain shows them under PartitionFilters);
+    *  3. score in one kernel — each surviving row is scored against ONLY
+    *     the queries probing its list (the [[Pq.adcProbedResid]] shape,
+    *     without the heap), self matches skipped, array-order double dot
+    *     (the [[graft.Functions.vecDot]] arithmetic). Output rows carry
+    *     no vector column.
     *
-    * @param q     (query_id, qe)
-    * @param cents (centroid_id, ce) — tiny, broadcast
-    * @param index (doc_id, embedding, centroid_id, …) partitioned scan */
+    * @param queries (query_id, vector), driver-held
+    * @param cents   (centroid_id, vector)
+    * @param index   (doc_id, embedding, centroid_id, …) partitioned scan
+    * @return (query_id, doc_id, score, prn) */
   private[operators] def scoredOn(
-      s: SparkSession, q: DataFrame, cents: DataFrame, index: DataFrame,
-      maxProbe: Int, pred: Option[Column]): DataFrame = {
+      s: SparkSession, queries: Array[(Long, Array[Float])], cents: Array[(Long, Array[Float])],
+      index: DataFrame, maxProbe: Int, pred: Option[Column]): DataFrame = {
     import s.implicits._
-    // Probe selection: top-maxProbe centroids per query (q × C rows —
-    // both tiny; broadcast the centroid side).
-    val wProbe = Window.partitionBy($"query_id").orderBy($"cscore".desc, $"centroid_id".asc)
-    val probed = q
-      .crossJoin(broadcast(cents))
-      .select($"query_id", $"qe", $"centroid_id", Functions.vecDot($"qe", $"ce").as("cscore"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter($"prn" <= maxProbe)
-      .select($"query_id", $"qe", $"centroid_id", $"prn")
-
-    // Candidate generation: partition-pruned join against the index; the
-    // probed side is tiny → broadcast; only probed centroid partitions of
-    // the index are read.
-    pred.foldLeft(index)(_ filter _)
-      .join(broadcast(probed), Seq("centroid_id"))
-      .filter($"query_id" =!= $"doc_id")
-      .select($"query_id", $"doc_id",
-        Functions.vecDot($"qe", $"embedding").as("score"), $"prn")
+    val probes = probeLists(queries, cents, maxProbe)
+    val bcQ = s.sparkContext.broadcast(queries)
+    val bcP = s.sparkContext.broadcast((probes.lists, probes.ranks))
+    pred.foldLeft(index.filter($"centroid_id".isin(probes.lists.keys.toSeq.sorted: _*)))(_ filter _)
+      .select($"doc_id", $"embedding", $"centroid_id")
+      .as[(Long, Array[Float], Long)]
+      .mapPartitions { rows =>
+        val qs = bcQ.value
+        val (lists, ranks) = bcP.value
+        rows.flatMap { case (docId, v, cid) =>
+          val qis = lists.getOrElse(cid, Array.emptyIntArray)
+          val prns = ranks.getOrElse(cid, Array.emptyIntArray)
+          val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Double, Int)](qis.length)
+          var j = 0
+          while (j < qis.length) {
+            val (qid, qv) = qs(qis(j))
+            if (qid != docId) {
+              val n = math.min(qv.length, v.length)
+              var sc = 0.0
+              var i = 0
+              while (i < n) { sc += qv(i).toDouble * v(i).toDouble; i += 1 }
+              out += ((qid, docId, sc, prns(j)))
+            }
+            j += 1
+          }
+          out
+        }
+      }
+      .toDF("query_id", "doc_id", "score", "prn")
   }
 
-  /** Driver-side probe selection for the code-scan tiers ([[Sq]], [[Pq]]):
-    * each query's top-`nProbe` centroids by dot desc, centroid_id asc —
-    * the v09 probe contract, on the array-order double dot the oracle's
-    * unnest sum uses. Returns centroid_id → indices (into `queries`) of
-    * the queries probing it, and centroid_id → every query's coarse dot. */
+  /** A query set's probes. `lists`: centroid_id → indices (into the
+    * queries, ascending) of the queries probing it; `ranks`: parallel to
+    * `lists`, each such query's 1-based probe rank of that centroid;
+    * `dots`: centroid_id → every query's coarse dot. */
+  private[operators] final case class Probes(
+      lists: Map[Long, Array[Int]],
+      ranks: Map[Long, Array[Int]],
+      dots: Map[Long, Array[Double]])
+
+  /** Driver-side probe selection, the only probe of the search tiers
+    * (IVF-flat via [[scoredOn]], [[Sq]], [[Pq]]): each query's
+    * top-`nProbe` centroids by dot desc, centroid_id asc — the v09 probe
+    * contract ([[BruteForce.rankCentroids]]), on the array-order double
+    * dot the oracle's unnest sum uses. */
   private[operators] def probeLists(
       queries: Array[(Long, Array[Float])],
       cents: Array[(Long, Array[Float])],
-      nProbe: Int): (Map[Long, Array[Int]], Map[Long, Array[Double]]) = {
+      nProbe: Int): Probes = {
     val dots = cents.map { case (cid, _) => cid -> new Array[Double](queries.length) }.toMap
-    val byCid = scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Int]]
+    val byCid = scala.collection.mutable.HashMap.empty[Long, (
+      scala.collection.mutable.ArrayBuffer[Int], scala.collection.mutable.ArrayBuffer[Int])]
     queries.zipWithIndex.foreach { case ((_, qv), qi) =>
-      cents
-        .map { case (cid, cv) =>
-          val n = math.min(qv.length, cv.length)
-          var sc = 0.0
-          var i = 0
-          while (i < n) { sc += qv(i).toDouble * cv(i).toDouble; i += 1 }
-          dots(cid)(qi) = sc
-          (cid, sc)
-        }
-        .sortBy { case (cid, sc) => (-sc, cid) }
+      val ranked = BruteForce.rankCentroids(qv, cents)
+      ranked.foreach { case (cid, sc) => dots(cid)(qi) = sc }
+      ranked
         .take(nProbe)
-        .foreach { case (cid, _) =>
-          byCid.getOrElseUpdate(cid, scala.collection.mutable.ArrayBuffer.empty) += qi
+        .zipWithIndex
+        .foreach { case ((cid, _), r) =>
+          val (qis, prns) = byCid.getOrElseUpdate(cid,
+            (scala.collection.mutable.ArrayBuffer.empty, scala.collection.mutable.ArrayBuffer.empty))
+          qis += qi
+          prns += r + 1
         }
     }
-    (byCid.iterator.map { case (cid, qis) => cid -> qis.toArray }.toMap, dots)
+    Probes(
+      byCid.iterator.map { case (cid, (qis, _)) => cid -> qis.toArray }.toMap,
+      byCid.iterator.map { case (cid, (_, prns)) => cid -> prns.toArray }.toMap,
+      dots)
   }
 
   /** V3/V5 search: top-k per query with nProbe probed partitions. Final
@@ -823,9 +859,7 @@ object Ann extends QModule {
       // clobbered by the roll-forward's replace — recovering first makes
       // the ordering impossible (two fs.exists when nothing crashed)
       recoverCompacting(s, path)
-      val cs = centroidsFrame(s, path)
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
-      assignWrite(s, path, delta, cs, "append")
+      assignWrite(s, path, delta, centroidsAt(s, path), "append")
     }
 
   /** STREAMING ingest into the index: each micro-batch of (id, vec,
@@ -873,15 +907,11 @@ object Ann extends QModule {
     * base+delta partitions. Same probe/score/rerank core as [[search]]. */
   def searchIncremental(
       s: SparkSession, d: String, maxQueryId: Int, k: Int, nProbe: Int): DataFrame = {
-    import s.implicits._
     val path = buildIncrementalIndex(s, d)
-    val cents = centroidsFrame(s, path)
     val idx = s.read.schema(IndexSchema).parquet(path)
       .withColumn("centroid_id", col("centroid_id").cast("long"))
-    val q = emb(s, d)
-      .filter($"vec_id" < maxQueryId)
-      .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-    BruteForce.rerank(scoredOn(s, q, cents, idx, nProbe, None).drop("prn"), k)
+    BruteForce.rerank(scoredOn(s, VectorSearch.queryVectors(s, d, maxQueryId),
+      centroidsAt(s, path), idx, nProbe, None).drop("prn"), k)
   }
 
   // ---------------------------------------------- index lifecycle: delete
@@ -1162,9 +1192,8 @@ object Ann extends QModule {
   /** [[search]] with logical deletes applied: a broadcast anti-join of
     * the scored candidates against the tombstone set, BEFORE the top-k
     * rerank — so k is guaranteed over the live universe (a post-top-k
-    * mask could return < k). The anti-join rides after the
-    * partition-pruned probe join, keeping dynamic pruning adjacent to
-    * the index scan. */
+    * mask could return < k). The anti-join rides on the candidate frame
+    * [[scoredOn]] emits, after its statically pruned index scan. */
   def searchLive(
       s: SparkSession, d: String, maxQueryId: Int, k: Int, nProbe: Int): DataFrame = {
     val cand = scoredCandidates(s, d, maxQueryId, nProbe).drop("prn")
@@ -1182,12 +1211,8 @@ object Ann extends QModule {
   def searchLiveAt(
       s: SparkSession, d: String, path: String,
       maxQueryId: Int, k: Int, nProbe: Int): DataFrame = {
-    import s.implicits._
-    val q = emb(s, d)
-      .filter($"vec_id" < maxQueryId)
-      .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-    val cents = centroidsFrame(s, path)
-    val cand = scoredOn(s, q, cents, indexFrame(s, path), nProbe, None).drop("prn")
+    val cand = scoredOn(s, VectorSearch.queryVectors(s, d, maxQueryId), centroidsAt(s, path),
+      indexFrame(s, path), nProbe, None).drop("prn")
     val tomb = tombstonesAt(s, path).select(col("doc_id")).distinct()
     // rerankDistinct: see [[searchLive]] (mid-swap duplicate masking)
     BruteForce.rerankDistinct(cand.join(broadcast(tomb), Seq("doc_id"), "left_anti"), k)
@@ -1198,11 +1223,6 @@ object Ann extends QModule {
   def searchAtPath(
       s: SparkSession, d: String, path: String, version: Int,
       maxQueryId: Int, k: Int, nProbe: Int): DataFrame = {
-    import s.implicits._
-    val q = emb(s, d)
-      .filter($"vec_id" < maxQueryId)
-      .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-    val cents = centroidsFrame(s, path)
     // rerankDistinct, not rerank (ADVICE r14 #1): a manifest written
     // while a crashed add-first swap was still unhealed pins BOTH the
     // old and the minted copy of each survivor — identical vectors,
@@ -1211,7 +1231,8 @@ object Ann extends QModule {
     // should no longer be written; this is the belt-and-braces that
     // keeps the one-rank contract on any that exist.
     BruteForce.rerankDistinct(
-      scoredOn(s, q, cents, loadIndexAt(s, path, version), nProbe, None).drop("prn"), k)
+      scoredOn(s, VectorSearch.queryVectors(s, d, maxQueryId), centroidsAt(s, path),
+        loadIndexAt(s, path, version), nProbe, None).drop("prn"), k)
   }
 
   /** Physical reclaim of tombstoned rows — PARTITION-LOCAL: only the
@@ -1563,19 +1584,11 @@ object Ann extends QModule {
     // probes/nbrs frames below bind their file listings, or the heal's
     // renames would fail this verb's own read.
     recoverCompacting(s, path)
-    val cs = centroidsFrame(s, path)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val bcC = s.sparkContext.broadcast(cs)
+    val bcC = s.sparkContext.broadcast(centroidsAt(s, path))
     val probes = indexFrame(s, path)
       .select($"doc_id", $"embedding").as[(Long, Array[Float])]
       .flatMap { case (id, vec) =>
-        bcC.value.iterator.map { case (cid, cv) =>
-          val n = math.min(vec.length, cv.length)
-          var sc = 0.0
-          var i = 0
-          while (i < n) { sc += cv(i).toDouble * vec(i).toDouble; i += 1 }
-          (cid, sc)
-        }.toArray.sortBy { case (cid, sc) => (-sc, cid) }
+        BruteForce.rankCentroids(vec, bcC.value)
           .take(GraphBuildProbe)
           .map { case (cid, _) => (id, vec, cid) }
       }.toDF("query_id", "qe", "centroid_id")
@@ -1647,11 +1660,10 @@ object Ann extends QModule {
     // mid-swap duplicated index would link the delta against files the
     // roll-forward is about to delete
     recoverCompacting(s, path)
-    val q = delta.toDF("id", "vec", "label")
-      .select($"id".as("query_id"), $"vec".as("qe"))
-    val cents = centroidsFrame(s, path)
+    val queries = delta.collect().map { case (id, vec, _) => (id, vec) }
     val nbr = BruteForce.rerank(
-      scoredOn(s, q, cents, indexFrame(s, path), GraphBuildProbe, None).drop("prn"),
+      scoredOn(s, queries, centroidsAt(s, path), indexFrame(s, path), GraphBuildProbe, None)
+        .drop("prn"),
       GraphDegree)
       .select($"query_id", $"doc_id", $"score")
     val out = nbr.select($"query_id".as("src"), $"doc_id".as("dst"), $"score")
@@ -2073,8 +2085,8 @@ object Ann extends QModule {
   def searchArtifact(
       s: SparkSession, q: DataFrame, path: String, k: Int, nProbe: Int,
       maskTombstones: Boolean = true, pred: Option[Column] = None): DataFrame = {
-    val cents = centroidsFrame(s, path)
-    val cand = scoredOn(s, q, cents, indexFrame(s, path), nProbe, pred).drop("prn")
+    val cand = scoredOn(s, queryArray(q), centroidsAt(s, path), indexFrame(s, path), nProbe, pred)
+      .drop("prn")
     val live =
       if (maskTombstones) {
         val tomb = tombstonesAt(s, path).select(col("doc_id")).distinct()
@@ -2383,8 +2395,7 @@ object Ann extends QModule {
     if (over.isEmpty)
       return RebalanceReport(imb(before), imb(before), before, before, Nil)
 
-    val centsAll = centroidsFrame(s, path)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    val centsAll = centroidsAt(s, path)
     val centsMap = scala.collection.mutable.LinkedHashMap(centsAll.toIndexedSeq: _*)
     var nextCid = centsAll.map(_._1).max + 1
     val (fs, _) = hfs(s, path)
@@ -3041,8 +3052,7 @@ object Ann extends QModule {
     val flagged = frame.collect { case (cid, _, nf, 1) if nf > 0 => (cid, nf) }.toSeq
     if (flagged.isEmpty) return Nil
     val mean = frame.map(_._3).sum.toDouble / frame.count(_._3 > 0)
-    val centsAll = centroidsFrame(s, path)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    val centsAll = centroidsAt(s, path)
     val centsMap = scala.collection.mutable.LinkedHashMap(centsAll.toIndexedSeq: _*)
     var nextCid = centsAll.map(_._1).max + 1
     val minted = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -3330,15 +3340,11 @@ object Ann extends QModule {
     * probe/score/rerank core as every other index surface. */
   def searchSharded(
       s: SparkSession, d: String, maxQueryId: Int, k: Int, nProbe: Int): DataFrame = {
-    import s.implicits._
     val path = buildShardedIndex(s, d)
-    val cents = centroidsFrame(s, path)
     val idx = s.read.schema(IndexSchema).parquet(path)
       .withColumn("centroid_id", col("centroid_id").cast("long"))
-    val q = emb(s, d)
-      .filter($"vec_id" < maxQueryId)
-      .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-    BruteForce.rerank(scoredOn(s, q, cents, idx, nProbe, None).drop("prn"), k)
+    BruteForce.rerank(scoredOn(s, VectorSearch.queryVectors(s, d, maxQueryId),
+      centroidsAt(s, path), idx, nProbe, None).drop("prn"), k)
   }
 
   // ------------------------------------------------ snapshots / time travel
@@ -3504,9 +3510,8 @@ object Ann extends QModule {
       k: Int, nProbe: Int, seedK: Int, excludeSelf: Boolean = true): DataFrame = {
     import s.implicits._
     val idx = loadIndexAt(s, path, version)
-    val cents = centroidsFrame(s, path)
     val seeds = BruteForce.rerank(
-      scoredOn(s, q, cents, idx, nProbe, None).drop("prn"), seedK)
+      scoredOn(s, queryArray(q), centroidsAt(s, path), idx, nProbe, None).drop("prn"), seedK)
       .select($"query_id", $"doc_id")
     val expanded = seeds.as("s")
       .join(graphAtVersion(s, path, version).as("g"), col("s.doc_id") === col("g.src"))
@@ -3632,6 +3637,12 @@ object Ann extends QModule {
   /** The artifact's quantizer sidecar, swap-recovery included. */
   private[operators] def centroidsFrame(s: SparkSession, path: String): DataFrame =
     sidecarFrame(s, path, "_centroids", CentroidsSchema)
+
+  /** [[centroidsFrame]] collected: (centroid_id, ce) sorted by id. */
+  private[operators] def centroidsAt(s: SparkSession, path: String): Array[(Long, Array[Float])] = {
+    import s.implicits._
+    centroidsFrame(s, path).as[(Long, Array[Float])].collect().sortBy(_._1)
+  }
 
   /** UPSERT — the remaining CRUD verb (v20 adds, v21 deletes): rows
     * whose doc_ids already exist in the artifact are tombstoned and
@@ -4351,10 +4362,8 @@ object Ann extends QModule {
       import s.implicits._
       val merged = buildShardedIndex(s, d) // ensures shard build ran
       val root = shardRoot(s, d)
-      val cents = s.read.schema(CentroidsSchema).parquet(s"$merged/_centroids")
-      val q = emb(s, d)
-        .filter($"vec_id" < 20)
-        .select($"vec_id".as("query_id"), $"embedding".as("qe"))
+      val cents = centroidsAt(s, merged)
+      val q = VectorSearch.queryVectors(s, d, 20)
       // NOTE: v37's merge DRAINED the shard dirs (faiss merge_into
       // semantics), so the per-shard scan here reads the merged artifact
       // restricted to each shard's rows — the same bytes the un-merged

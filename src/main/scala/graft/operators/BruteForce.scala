@@ -321,6 +321,22 @@ object BruteForce {
     (bestId, bestScore)
   }
 
+  /** Every centroid ranked against `vec`: (centroid id, array-order
+    * double dot), dot desc, ties to the smaller id — the v09 probe
+    * order, so a probe of width n is the first n entries. Shared by the
+    * driver-side search probe ([[Ann.probeLists]]) and the per-row
+    * probes of the graph and cluster builds. */
+  private[operators] def rankCentroids(
+      vec: Array[Float],
+      cs: Array[(Long, Array[Float])]): Array[(Long, Double)] =
+    cs.map { case (cid, cv) =>
+      val n = math.min(cv.length, vec.length)
+      var s = 0.0
+      var i = 0
+      while (i < n) { s += cv(i).toDouble * vec(i).toDouble; i += 1 }
+      (cid, s)
+    }.sortBy { case (cid, s) => (-s, cid) }
+
   /** [[assign]] with a metadata column riding along — the build path for
     * a FILTERED index ([[Ann.buildIndex]] carries the corpus `label` into
     * the persisted artifact so search-time predicates push down into the

@@ -108,15 +108,7 @@ object Cluster extends QModule {
       .select($"vec_id".as("id"), $"embedding".as("vec"))
       .as[(Long, Array[Float])]
       .flatMap { case (id, vec) =>
-        val scored = bc.value.iterator.map { case (cid, cv) =>
-          val n = math.min(cv.length, vec.length)
-          var sc = 0.0
-          var i = 0
-          while (i < n) { sc += cv(i).toDouble * vec(i).toDouble; i += 1 }
-          (cid, sc)
-        }.toArray
-          .sortBy { case (cid, sc) => (-sc, cid) }
-        pick(scored).zipWithIndex
+        pick(BruteForce.rankCentroids(vec, bc.value)).zipWithIndex
           .map { case ((cid, _), j) => (id, cid, j + 1, vec) }
       }
       .toDF("id", "centroid_id", "rn", "vec")

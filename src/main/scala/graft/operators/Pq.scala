@@ -365,32 +365,13 @@ object Pq extends QModule {
       rcand: Int = RCand): DataFrame = {
     import s.implicits._
     require(rcand <= RCand, s"rcand $rcand exceeds the per-partition ADC heap bound $RCand")
-    val corpus = corpusDs(s, d)
-    val queries = corpus.filter($"id" < maxQueryId).collect().sortBy(_._1)
+    val queries = VectorSearch.queryVectors(s, d, maxQueryId)
     val cands = BruteForce
       .rerank(
         adcCandidates(encoded, cb, queries).withColumnRenamed("approx", "score"),
         rcand)
       .select($"query_id", $"doc_id")
-    rescoreExact(s, d, cands, maxQueryId, k)
-  }
-
-  /** Exact rescore of a bounded (query_id, doc_id) candidate frame:
-    * candidates are q × RCand rows (tiny) — broadcast them into the
-    * corpus join so only candidate vectors are re-read. Shared by the
-    * flat ([[searchFrom]]) and IVF+PQ ([[searchIvfPq]]) tails. */
-  private def rescoreExact(
-      s: SparkSession, d: String, cands: DataFrame, maxQueryId: Int, k: Int): DataFrame = {
-    import s.implicits._
-    val emb = Tables(s, d, "embeddings")
-    val rescored = emb
-      .select($"vec_id".as("doc_id"), $"embedding")
-      .join(broadcast(cands), Seq("doc_id"))
-      .join(broadcast(
-        emb.filter($"vec_id" < maxQueryId).select($"vec_id".as("query_id"), $"embedding".as("qe"))),
-        Seq("query_id"))
-      .select($"query_id", $"doc_id", Functions.vecDot($"qe", $"embedding").as("score"))
-    BruteForce.rerank(rescored, k)
+    VectorSearch.rescoreExact(s, d, cands, maxQueryId, k)
   }
 
   // ----------------------------------------------------- K4: persistence
@@ -643,16 +624,17 @@ object Pq extends QModule {
       rcand: Int): DataFrame = {
     import s.implicits._
     require(rcand <= RCand, s"rcand $rcand exceeds the per-partition ADC heap bound $RCand")
-    val queries = corpusDs(s, d).filter($"id" < maxQueryId).collect().sortBy(_._1)
+    val queries = VectorSearch.queryVectors(s, d, maxQueryId)
     // probe sets + first-stage coarse dots, computed once driver-side
     // (C × nq doubles)
-    val (probes, qcDots) = Ann.probeLists(queries, cents, nProbe)
+    val probes = Ann.probeLists(queries, cents, nProbe)
     val cands = BruteForce
       .rerank(
-        adcProbedResid(encoded, rcb, queries, probes, qcDots).withColumnRenamed("approx", "score"),
+        adcProbedResid(encoded, rcb, queries, probes.lists, probes.dots)
+          .withColumnRenamed("approx", "score"),
         rcand)
       .select($"query_id", $"doc_id")
-    rescoreExact(s, d, cands, maxQueryId, k)
+    VectorSearch.rescoreExact(s, d, cands, maxQueryId, k)
   }
 
   private def ivfPqIndexPath(s: SparkSession, d: String): String = {

@@ -224,36 +224,13 @@ object Sq extends QModule {
       maxQueryId: Int,
       k: Int): DataFrame = {
     import s.implicits._
-    val queries = corpusDs(s, d).filter($"id" < maxQueryId).collect().sortBy(_._1)
+    val queries = VectorSearch.queryVectors(s, d, maxQueryId)
     val cands = BruteForce
       .rerank(
         adcCandidates(encoded, lo, hi, queries).withColumnRenamed("approx", "score"),
         RCand)
       .select($"query_id", $"doc_id")
-    rescoreTopK(s, d, cands, maxQueryId, k)
-  }
-
-  /** Exact rescore of a bounded (query_id, doc_id) candidate frame
-    * against the float corpus, then the final top-k — the tail every SQ
-    * search path shares. Candidates are q × RCand rows (tiny), so both
-    * joins broadcast them and only candidate vectors are re-read. */
-  private def rescoreTopK(
-      s: SparkSession,
-      d: String,
-      cands: DataFrame,
-      maxQueryId: Int,
-      k: Int): DataFrame = {
-    import s.implicits._
-    val emb = Tables(s, d, "embeddings")
-    val rescored = emb
-      .select($"vec_id".as("doc_id"), $"embedding")
-      .join(broadcast(cands), Seq("doc_id"))
-      .join(
-        broadcast(
-          emb.filter($"vec_id" < maxQueryId).select($"vec_id".as("query_id"), $"embedding".as("qe"))),
-        Seq("query_id"))
-      .select($"query_id", $"doc_id", graft.Functions.vecDot($"qe", $"embedding").as("score"))
-    BruteForce.rerank(rescored, k)
+    VectorSearch.rescoreExact(s, d, cands, maxQueryId, k)
   }
 
   // --------------------------------------------------- IVF composition
@@ -368,14 +345,14 @@ object Sq extends QModule {
     val assignedAll = graft.Memo.cached(s, s"sq-assigned:$d")(
       encodeAssignedTagged(corpusDsTagged(s, d), cents, lo, hi))
     val assigned = pred.foldLeft(assignedAll)(_ filter _)
-    val queries = corpusDs(s, d).filter($"id" < maxQueryId).collect().sortBy(_._1)
-    val (probes, _) = Ann.probeLists(queries, cents, nProbe)
+    val queries = VectorSearch.queryVectors(s, d, maxQueryId)
     val cands = BruteForce
       .rerank(
-        adcProbed(assigned, lo, hi, queries, probes).withColumnRenamed("approx", "score"),
+        adcProbed(assigned, lo, hi, queries, Ann.probeLists(queries, cents, nProbe).lists)
+          .withColumnRenamed("approx", "score"),
         RCand)
       .select($"query_id", $"doc_id")
-    rescoreTopK(s, d, cands, maxQueryId, k)
+    VectorSearch.rescoreExact(s, d, cands, maxQueryId, k)
   }
 
   // ----------------------------------------------------- K4: persistence

@@ -35,6 +35,36 @@ object VectorSearch extends QModule {
 
   private def emb(s: SparkSession, d: String) = Tables(s, d, "embeddings")
 
+  /** The registry's query set, driver-held: (vec_id, embedding) for
+    * vec_id < maxQueryId, sorted by id. One collect per call — every
+    * search tier probes or scores these arrays. */
+  private[operators] def queryVectors(
+      s: SparkSession, d: String, maxQueryId: Int): Array[(Long, Array[Float])] = {
+    import s.implicits._
+    emb(s, d).filter($"vec_id" < maxQueryId).select($"vec_id", $"embedding")
+      .as[(Long, Array[Float])].collect().sortBy(_._1)
+  }
+
+  /** Exact rescore of a bounded (query_id, doc_id) candidate frame
+    * against the float corpus, then the final top-k: the tail the
+    * code-scan tiers ([[Sq]], [[Pq]]) share. Candidates are q × RCand
+    * rows (tiny), so both joins broadcast them and only candidate
+    * vectors are re-read. */
+  private[operators] def rescoreExact(
+      s: SparkSession, d: String, cands: DataFrame, maxQueryId: Int, k: Int): DataFrame = {
+    import s.implicits._
+    val e = emb(s, d)
+    val rescored = e
+      .select($"vec_id".as("doc_id"), $"embedding")
+      .join(broadcast(cands), Seq("doc_id"))
+      .join(
+        broadcast(
+          e.filter($"vec_id" < maxQueryId).select($"vec_id".as("query_id"), $"embedding".as("qe"))),
+        Seq("query_id"))
+      .select($"query_id", $"doc_id", graft.Functions.vecDot($"qe", $"embedding").as("score"))
+    BruteForce.rerank(rescored, k)
+  }
+
   // ---------------------------------------------------------------- v01
   /** F8: L2 norms of all embeddings (the normalize-once trick's input,
     * `004:193-196`). */
@@ -104,10 +134,8 @@ object VectorSearch extends QModule {
     * fused [[BruteForce]] kernel. */
   def topK(s: SparkSession, d: String, maxQueryId: Int, k: Int): DataFrame = {
     import s.implicits._
-    val e = emb(s, d)
-    val corpus = e.select($"vec_id".as("id"), $"embedding".as("vec"))
-    val qs = corpus.filter($"id" < maxQueryId)
-      .as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
+    val corpus = emb(s, d).select($"vec_id".as("id"), $"embedding".as("vec"))
+    val qs = queryVectors(s, d, maxQueryId).toSeq
     // the planned-operator form (CosineCandidates node + strategy + exec)
     // — same kernel arithmetic as BruteForce.topK (equivalence tested),
     // but visible to Catalyst: EXPLAIN shows the node and the
@@ -423,9 +451,7 @@ object VectorSearch extends QModule {
       val e = emb(s, d)
       val corpus = e.filter($"label" % 3 === 0)
         .select($"vec_id".as("id"), $"embedding".as("vec"))
-      val qs = e.filter($"vec_id" < 20)
-        .select($"vec_id", $"embedding")
-        .as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
+      val qs = queryVectors(s, d, 20).toSeq
       graft.plans.CosineTopK.topK(corpus, qs, k = 10, excludeSelf = true)
         .select($"query_id", $"rnk", $"doc_id")
         .orderBy($"query_id", $"rnk")
@@ -511,7 +537,7 @@ object VectorSearch extends QModule {
     import s.implicits._
     val corpus = emb(s, d).select($"vec_id".as("id"), $"embedding".as("vec"))
       .as[(Long, Array[Float])]
-    val qs = corpus.filter($"id" < maxQueryId).collect().sortBy(_._1)
+    val qs = queryVectors(s, d, maxQueryId)
     BruteForce.rangeSearch(corpus, qs, tau, excludeSelf = true)
   }
 
@@ -584,7 +610,7 @@ object VectorSearch extends QModule {
       import s.implicits._
       val corpus = emb(s, d).select($"vec_id".as("id"), $"embedding".as("vec"))
         .as[(Long, Array[Float])]
-      val qs = corpus.filter($"id" < 10).collect().sortBy(_._1)
+      val qs = queryVectors(s, d, 10)
       BruteForce.maxSimTopK(corpus, qs, MaxSimSubDim, k = 10, excludeSelf = true)
         .select($"query_id", $"rnk", $"doc_id", round($"score", 4).as("score"))
         .orderBy($"query_id", $"rnk")
@@ -711,13 +737,7 @@ object VectorSearch extends QModule {
       // probe rows: (id, vec, centroid_id) × KnnProbe — map-side, the
       // same array-order dot + (score desc, cid asc) order as the oracle
       val probes = corpus.flatMap { case (id, vec) =>
-        bcC.value.iterator.map { case (cid, cv) =>
-          val n = math.min(vec.length, cv.length)
-          var sc = 0.0
-          var i = 0
-          while (i < n) { sc += cv(i).toDouble * vec(i).toDouble; i += 1 }
-          (cid, sc)
-        }.toArray.sortBy { case (cid, sc) => (-sc, cid) }
+        BruteForce.rankCentroids(vec, bcC.value)
           .take(KnnProbe)
           .map { case (cid, _) => (id, vec, cid) }
       }.toDF("id", "vec", "centroid_id")

@@ -7,8 +7,8 @@ import graft.operators.{Ann, VectorSearch}
 /** IVF index build/search properties (SURVEY §5.2 ANN recall gate):
   * probing everything reproduces the exact result; overlap with the exact
   * top-10 is monotone in nProbe; the index artifact is persisted
-  * partitioned and rebuilt only when absent; the probed scan is
-  * partition-pruned. */
+  * partitioned and rebuilt only when absent; the probed scan reads only
+  * the probed partitions. */
 class AnnSpec extends SparkSpec {
 
   private def overlapAtProbe(np: Int): Double = {
@@ -55,14 +55,15 @@ class AnnSpec extends SparkSpec {
     assert(new java.io.File(s"$path/_SUCCESS").lastModified() == mtime)
   }
 
-  test("probed search plan prunes index partitions (PartitionFilters present)") {
-    val plan = Ann.search(spark, sf0001, maxQueryId = 5, k = 3, nProbe = 2)
-      .queryExecution.executedPlan.toString
-    // The index scan must carry a partition filter on centroid_id — i.e.
-    // a dynamic pruning or pushed filter, not a full scan of every
-    // centroid directory.
-    assert(plan.contains("PartitionFilters") || plan.contains("dynamicpruning"),
-      s"no partition pruning in plan:\n$plan")
+  test("probed search reads exactly the probed index partitions, fewer than C") {
+    import spark.implicits._
+    val queries = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .filter($"vec_id" < 5).select($"embedding").as[Array[Float]].collect().toSeq
+    val probed = IndexScans.probedLists(queries, Ann.centroidArray(spark, sf0001).toSeq, 2)
+    assert(probed.size < Ann.Centroids)
+    val read = IndexScans.partitionsRead(
+      Ann.search(spark, sf0001, maxQueryId = 5, k = 3, nProbe = 2))
+    assert(read == probed.size, s"read $read index partitions; the queries probe ${probed.size}")
   }
 
   test("coarse-quantizer size is a session conf knob; full probe still exact at C=8") {

@@ -35,9 +35,19 @@ class FilteredSearchSpec extends SparkSpec {
   private lazy val annResult = SparkEntry.queries("v19_filtered_ann")(spark, sf0001)
 
   test("v19: partition pruning AND label pushdown compose on the index scan") {
-    val plan = annResult.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") || plan.contains("dynamicpruning"),
-      s"no centroid partition pruning:\n$plan")
+    import graft.operators.Ann
+    // v19's plan with 2 of its 20 queries: at sf0.001 its 20 queries
+    // probe all 32 lists between them, and a full read proves no pruning
+    val nq = 2
+    val queries = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .filter($"vec_id" < nq).select($"embedding").as[Array[Float]].collect().toSeq
+    val probed = IndexScans.probedLists(queries, Ann.centroidArray(spark, sf0001).toSeq, 8)
+    assert(probed.size < Ann.Centroids)
+    val search = Ann.search(spark, sf0001, maxQueryId = nq, k = 10, nProbe = 8,
+      pred = Some($"label" % 3 === 0))
+    val read = IndexScans.partitionsRead(search)
+    assert(read == probed.size, s"read $read index partitions; the queries probe ${probed.size}")
+    val plan = search.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("label"),
       s"label predicate not pushed into the index scan:\n$plan")
   }

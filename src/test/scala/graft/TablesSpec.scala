@@ -12,8 +12,9 @@ import graft.operators.{Ann, VectorSearch}
   * file fingerprint) and [[Ann.centroidArray]] selects the coarse
   * centroids once per (session, dir, C, fingerprint). These tests pin
   * that the memo never serves stale inputs, that warm TVF expansions
-  * run no per-call inference or centroid job, and that the entries die
-  * with their session. */
+  * run no per-call inference or centroid job (and a warm `ann_search`
+  * call no more than three jobs in all), and that the entries die with
+  * their session. */
 class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
@@ -124,7 +125,7 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally Memo.drop(s2)
   }
 
-  test("warm TVF expansion: 0 jobs for ann_search, at most 1 for cosine_topk and ivfpq_search") {
+  test("warm TVF expansion runs at most 1 job; a warm ann_search call at most 3") {
     val s2 = session()
     val group = "tables-spec-expand"
     val jobs = new AtomicInteger()
@@ -137,15 +138,15 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
           case _ =>
         }
     }
-    /** Jobs submitted while `sql` is parsed and analyzed — the TVF
-      * expansion. The listener bus delivers in order, so once the fence
-      * job's start arrives every expansion job has been counted. */
-    def expansionJobs(sql: String): Int = {
+    /** Jobs submitted while `body` runs. The listener bus delivers in
+      * order, so once the fence job's start arrives every job of `body`
+      * has been counted. */
+    def jobsDuring(body: => Unit): Int = {
       val sc = s2.sparkContext
       jobs.set(0)
       val seen = fence.get()
-      sc.setJobGroup(group, "expand")
-      try s2.sql(sql) finally sc.clearJobGroup()
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
       sc.setJobGroup(s"$group-fence", "fence")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30000000000L
@@ -155,15 +156,22 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
+      // each expansion collects its query vectors (ann_search: for the
+      // driver-side probe) — one job, no schema inference, no centroid scan
+      val ann = s"SELECT * FROM ann_search('$sf0001', 1, 10, 8)"
       val calls = Seq(
         s"SELECT * FROM cosine_topk('$sf0001', 1, 10)" -> 1,
-        s"SELECT * FROM ann_search('$sf0001', 1, 10, 8)" -> 0,
+        ann -> 1,
         s"SELECT * FROM ivfpq_search('$sf0001', 1, 10, 8)" -> 1)
       calls.foreach { case (sql, _) => s2.sql(sql).collect() } // warm up
       calls.foreach { case (sql, bound) =>
-        val n = expansionJobs(sql)
+        val n = jobsDuring(s2.sql(sql))
         assert(n <= bound, s"$n jobs while expanding $sql (bound $bound)")
       }
+      // the whole call: the query collect, then the pruned index scan
+      // with its scoring kernel and the top-k merge
+      val n = jobsDuring(s2.sql(ann).collect())
+      assert(n <= 3, s"$n jobs for a warm $ann call (bound 3)")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       Memo.drop(s2)
