@@ -96,45 +96,95 @@ object TopKAgg {
     * can carry the same doc twice with identical vectors (a crash-window
     * reader's debris-union mid-split; see Ann.indexFrame). OFF by
     * default: the SQL-surfaced `collect_top_k` ranks duplicate ids as
-    * distinct rows, and the DuckDB oracles replay exactly that. */
+    * distinct rows, and the DuckDB oracles replay exactly that.
+    *
+    * A binary heap over parallel `double[]`/`long[]` arrays, root at
+    * slot 0: an offer allocates nothing (a boxed-tuple priority queue
+    * allocated on every comparison, inside every scan kernel's inner
+    * loop). Scores are compared with `<`/`==`, so they must not be NaN.
+    * The arrays grow by doubling up to k, so a large k costs nothing
+    * until it fills. */
   final class Heap(k: Int, dedupIds: Boolean = false) {
     require(k > 0, s"Heap capacity must be positive, got $k")
-    private val ord: Ordering[(Double, Long)] =
-      Ordering.by { case (s, i) => (-s, i) }
-    private val pq = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord)
+    private var scores = new Array[Double](math.min(k, 16))
+    private var ids = new Array[Long](scores.length)
+    private var n = 0
     // id -> its score in the heap (dedupIds mode only)
     private val members =
       if (dedupIds) scala.collection.mutable.HashMap.empty[Long, Double] else null
 
-    def offer(score: Double, id: Long): Unit =
-      if (dedupIds && members.contains(id)) {
-        val prev = members(id)
-        if (score > prev) {
-          // upgrade in place: O(k) rebuild, and only on the rare
-          // duplicate-with-better-score path
-          val keep = pq.toArray.filterNot { case (_, i) => i == id }
-          pq.clear()
-          keep.foreach(pq.enqueue(_))
-          pq.enqueue((score, id))
-          members(id) = score
-        }
-      } else if (pq.size < k) {
-        pq.enqueue((score, id))
-        if (dedupIds) members(id) = score
-      } else {
-        val (ws, wi) = pq.head
-        if (score > ws || (score == ws && id < wi)) {
-          pq.dequeue()
-          pq.enqueue((score, id))
-          if (dedupIds) { members.remove(wi); members(id) = score; () }
+    /** Slot a ranks below slot b: lower score, then higher id. */
+    private def worse(a: Int, b: Int): Boolean =
+      scores(a) < scores(b) || (scores(a) == scores(b) && ids(a) > ids(b))
+
+    private def swap(a: Int, b: Int): Unit = {
+      val s = scores(a); scores(a) = scores(b); scores(b) = s
+      val i = ids(a); ids(a) = ids(b); ids(b) = i
+    }
+
+    private def siftUp(from: Int): Unit = {
+      var j = from
+      while (j > 0 && worse(j, (j - 1) >>> 1)) { swap(j, (j - 1) >>> 1); j = (j - 1) >>> 1 }
+    }
+
+    private def siftDown(from: Int): Unit = {
+      var j = from
+      var done = false
+      while (!done) {
+        val l = 2 * j + 1
+        if (l >= n) done = true
+        else {
+          val c = if (l + 1 < n && worse(l + 1, l)) l + 1 else l
+          if (worse(c, j)) { swap(c, j); j = c } else done = true
         }
       }
+    }
 
-    def foreach(f: (Double, Long) => Unit): Unit = pq.foreach { case (s, i) => f(s, i) }
+    def size: Int = n
+
+    /** Offers one (score, id); true when the heap kept it. */
+    def offer(score: Double, id: Long): Boolean =
+      if (dedupIds && members.contains(id)) {
+        if (score > members(id)) {
+          // upgrade in place: a better score sinks away from the root;
+          // the O(k) slot search runs only on this rare path
+          var j = 0
+          while (ids(j) != id) j += 1
+          scores(j) = score
+          siftDown(j)
+          members(id) = score
+          true
+        } else false
+      } else if (n < k) {
+        if (n == scores.length) {
+          val cap = math.min(k, 2 * n)
+          scores = java.util.Arrays.copyOf(scores, cap)
+          ids = java.util.Arrays.copyOf(ids, cap)
+        }
+        scores(n) = score
+        ids(n) = id
+        n += 1
+        siftUp(n - 1)
+        if (dedupIds) members(id) = score
+        true
+      } else if (score > scores(0) || (score == scores(0) && id < ids(0))) {
+        val evicted = ids(0)
+        scores(0) = score
+        ids(0) = id
+        siftDown(0)
+        if (dedupIds) { members.remove(evicted); members(id) = score }
+        true
+      } else false
+
+    /** Every member, in heap (not rank) order. */
+    def foreach(f: (Double, Long) => Unit): Unit = {
+      var j = 0
+      while (j < n) { f(scores(j), ids(j)); j += 1 }
+    }
 
     /** Final rank order: score desc, id asc. */
     def sortedDesc(): Array[(Double, Long)] =
-      pq.toArray.sortBy { case (s, i) => (-s, i) }
+      Array.tabulate(n)(j => (scores(j), ids(j))).sortBy { case (s, i) => (-s, i) }
   }
 
   /** SQL builder shared by the function-registry and extension

@@ -605,10 +605,10 @@ object Ann extends QModule {
     *     scan, so the file listing keeps only the probed partitions
     *     (explain shows them under PartitionFilters);
     *  3. score in one kernel — each surviving row is scored against ONLY
-    *     the queries probing its list (the [[Pq.adcProbedResid]] shape,
-    *     without the heap), self matches skipped, array-order double dot
-    *     (the [[graft.Functions.vecDot]] arithmetic). Output rows carry
-    *     no vector column.
+    *     the queries probing its list (the [[Pq.searchIvfPq]] kernel's
+    *     probed scan, without its heaps), self matches skipped,
+    *     array-order double dot (the [[graft.Functions.vecDot]]
+    *     arithmetic). Output rows carry no vector column.
     *
     * @param queries (query_id, vector), driver-held
     * @param cents   (centroid_id, vector)

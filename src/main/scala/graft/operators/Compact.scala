@@ -113,24 +113,15 @@ object Compact extends QModule {
       .toDF("query_id", "doc_id", "neg_ham")
   }
 
-  /** Exact full-dimension rescore of a query-bounded candidate frame:
-    * (query_id, doc_id) → top-`k` by float dot, ties by doc_id — the
-    * shared stage-2 of v34/v35 (same shape as v33's rescore). */
+  /** Exact full-dimension rescore of a query-bounded (query_id, doc_id)
+    * candidate frame — the shared tail ([[VectorSearch.rescoreExact]]) —
+    * as v34/v35's (query_id, rnk, doc_id) rows in rank order. */
   private def rescoreExact(
       s: SparkSession, d: String, cand: DataFrame,
-      maxQ: Int = MaxQ, k: Int = K): DataFrame = {
-    import s.implicits._
-    val qv = emb(s, d).filter($"vec_id" < maxQ)
-      .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-    val scored = emb(s, d)
-      .select($"vec_id".as("doc_id"), $"embedding".as("de"))
-      .join(broadcast(cand.select("query_id", "doc_id")), Seq("doc_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .select($"query_id", $"doc_id", graft.Functions.vecDot($"qe", $"de").as("score"))
-    BruteForce.rerank(scored, k)
-      .select($"query_id", $"rnk", $"doc_id")
-      .orderBy($"query_id", $"rnk")
-  }
+      maxQ: Int = MaxQ, k: Int = K): DataFrame =
+    VectorSearch.rescoreExact(s, d, cand, maxQ, k)
+      .select(col("query_id"), col("rnk"), col("doc_id"))
+      .orderBy(col("query_id"), col("rnk"))
 
   /** The v34 two-stage binary search with the dial exposed: Hamming
     * top-`pool` candidates, exact top-`k` rescore — v43's bin tier
@@ -158,8 +149,7 @@ object Compact extends QModule {
       .rerank(
         hammingCandidates(s, d, queries, pool, pred).withColumnRenamed("neg_ham", "score"),
         pool)
-      .select(org.apache.spark.sql.functions.col("query_id"),
-        org.apache.spark.sql.functions.col("doc_id"))
+      .select(col("query_id"), col("doc_id"))
     rescoreExact(s, d, cand, maxQ, k)
   }
 

@@ -131,6 +131,77 @@ class PqSpec extends SparkSpec {
     assert(full.forall { case (q, d) => q != d })
   }
 
+  /** The IVF+PQ answer by the separate-stage composition, in plain
+    * Scala over the frame's rows: probe (coarse dot desc, centroid_id
+    * asc), ADC score = coarse dot + residual LUT sum over the probed
+    * lists (self skipped), global top-`rcand` by (approx desc, doc_id
+    * asc), exact array-order double dot, top-k by (score desc, doc_id
+    * asc). Rows are (query_id, rnk, doc_id, score). */
+  private def ivfPqReference(
+      rows: Seq[(Long, Long, Array[Long], Array[Float])],
+      cb: Array[(Long, Array[Double])],
+      cents: Array[(Long, Array[Float])],
+      queries: Array[(Long, Array[Float])],
+      k: Int, nProbe: Int, rcand: Int): Seq[(Long, Long, Long, Double)] = {
+    def dot(a: Array[Float], b: Array[Float]): Double =
+      a.indices.foldLeft(0.0)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
+    val sub = Pq.SubDim
+    queries.toSeq.flatMap { case (qid, qv) =>
+      val coarse = cents.map { case (cid, cv) => cid -> dot(cv, qv) }
+      val probed = coarse.sortBy { case (cid, sc) => (-sc, cid) }.take(nProbe).map(_._1).toSet
+      val qc = coarse.toMap
+      // lut(m)(code id) = dot(query subspace m, codeword subspace m)
+      val lut = (0 until qv.length / sub).map { m =>
+        cb.map { case (id, cv) =>
+          id -> (0 until sub).foldLeft(0.0)((acc, i) => acc + qv(m * sub + i).toDouble * cv(m * sub + i))
+        }.toMap
+      }
+      rows
+        .filter { case (doc, cid, _, _) => probed(cid) && doc != qid }
+        .map { case (doc, cid, codes, vec) =>
+          (codes.indices.foldLeft(qc(cid))((acc, m) => acc + lut(m)(codes(m))), doc, vec)
+        }
+        .sortBy { case (approx, doc, _) => (-approx, doc) }
+        .take(rcand)
+        .map { case (_, doc, vec) => (dot(qv, vec), doc) }
+        .sortBy { case (sc, doc) => (-sc, doc) }
+        .take(k)
+        .zipWithIndex
+        .map { case ((sc, doc), r) => (qid, r + 1L, doc, sc) }
+    }
+  }
+
+  test("fused IVF+PQ == the ADC -> global trim -> exact rescore composition, bit for bit") {
+    import graft.operators.Ann
+    val frame = Pq.ivfPqFrame(spark, sf0001)
+    val cb = Pq.residCodebook(spark, sf0001)
+    val cents = Ann.centroidArray(spark, sf0001)
+    val queries = corpus.filter($"id" < 12).collect().sortBy(_._1)
+    val labelOk = col("label") % 3 === 0
+    for {
+      parts <- Seq(1, 4)
+      (k, nProbe, rcand, pred) <- Seq(
+        (10, 4, Pq.RCand, None),
+        (10, 8, 15, None), // rcand < RCand: the global trim, not the heap, bounds the pool
+        (5, 8, Pq.RCand, Some(labelOk)),
+        (20, Ann.Centroids, 7, Some(labelOk))) // rcand < k: fewer than k rows
+    } {
+      val src = pred.foldLeft(frame.repartition(parts))(_ filter _)
+      val rows = src.select($"doc_id", $"centroid_id", $"codes", $"embedding")
+        .as[(Long, Long, Array[Long], Array[Float])].collect().toSeq
+      val want = ivfPqReference(rows, cb, cents, queries, k, nProbe, rcand)
+      val got = Pq.fusedSearch(src, cb, cents, queries, k, nProbe, rcand)
+        .select($"query_id", $"rnk", $"doc_id", $"score").as[(Long, Long, Long, Double)]
+        .collect().toSeq.sorted
+      val shape = s"partitions=$parts k=$k nProbe=$nProbe rcand=$rcand pred=${pred.isDefined}"
+      assert(want.nonEmpty && want.size == got.size, shape)
+      // scores compared as bits: the kernel's arithmetic is the reference's
+      assert(got.map { case (q, r, d, sc) => (q, r, d, java.lang.Double.doubleToLongBits(sc)) } ==
+        want.sorted.map { case (q, r, d, sc) => (q, r, d, java.lang.Double.doubleToLongBits(sc)) },
+        shape)
+    }
+  }
+
   test("IVF+PQ: the residual codebook is trained on residuals, not the raw corpus") {
     val flat = Pq.codebook(spark, sf0001).map { case (id, v) => (id, v.toSeq) }.toSeq
     val resid = Pq.residCodebook(spark, sf0001).map { case (id, v) => (id, v.toSeq) }.toSeq

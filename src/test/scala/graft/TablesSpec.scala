@@ -13,8 +13,8 @@ import graft.operators.{Ann, VectorSearch}
   * centroids once per (session, dir, C, fingerprint). These tests pin
   * that the memo never serves stale inputs, that warm TVF expansions
   * run no per-call inference or centroid job (and a warm `ann_search`
-  * call no more than three jobs in all), and that the entries die with
-  * their session. */
+  * or `ivfpq_search` call no more than three jobs in all), and that the
+  * entries die with their session. */
 class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
@@ -125,7 +125,9 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally Memo.drop(s2)
   }
 
-  test("warm TVF expansion runs at most 1 job; a warm ann_search call at most 3") {
+  /** Runs `body` on a fresh session with a job counter: the counter
+    * it is handed returns the jobs submitted while its argument runs. */
+  private def countingJobs(body: (SparkSession, (=> Unit) => Int) => Unit): Unit = {
     val s2 = session()
     val group = "tables-spec-expand"
     val jobs = new AtomicInteger()
@@ -138,15 +140,15 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
           case _ =>
         }
     }
-    /** Jobs submitted while `body` runs. The listener bus delivers in
-      * order, so once the fence job's start arrives every job of `body`
+    /** Jobs submitted while `work` runs. The listener bus delivers in
+      * order, so once the fence job's start arrives every job of `work`
       * has been counted. */
-    def jobsDuring(body: => Unit): Int = {
+    def jobsDuring(work: => Unit): Int = {
       val sc = s2.sparkContext
       jobs.set(0)
       val seen = fence.get()
       sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
+      try work finally sc.clearJobGroup()
       sc.setJobGroup(s"$group-fence", "fence")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30000000000L
@@ -155,7 +157,15 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       jobs.get()
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
+    try body(s2, jobsDuring(_))
+    finally {
+      spark.sparkContext.removeSparkListener(listener)
+      Memo.drop(s2)
+    }
+  }
+
+  test("warm TVF expansion runs at most 1 job; a warm ann_search call at most 3") {
+    countingJobs { (s2, jobsDuring) =>
       // each expansion collects its query vectors (ann_search: for the
       // driver-side probe) — one job, no schema inference, no centroid scan
       val ann = s"SELECT * FROM ann_search('$sf0001', 1, 10, 8)"
@@ -172,9 +182,17 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       // with its scoring kernel and the top-k merge
       val n = jobsDuring(s2.sql(ann).collect())
       assert(n <= 3, s"$n jobs for a warm $ann call (bound 3)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      Memo.drop(s2)
+    }
+  }
+
+  test("a warm ivfpq_search call runs at most 3 jobs") {
+    countingJobs { (s2, jobsDuring) =>
+      // the query collect at expansion, then one pass over the probed
+      // lists (ADC plus exact rescore) and the per-query merge
+      val pq = s"SELECT * FROM ivfpq_search('$sf0001', 1, 10, 8)"
+      s2.sql(pq).collect() // warm up: trains, encodes and caches the frame
+      val n = jobsDuring(s2.sql(pq).collect())
+      assert(n <= 3, s"$n jobs for a warm $pq call (bound 3)")
     }
   }
 

@@ -14,7 +14,8 @@ skip = "--skip-verify" in sys.argv
 if not skip:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True)
     tail = (r.stdout + r.stderr)[-3000:]
     if r.returncode != 0:
         print(tail); sys.exit(1)
