@@ -61,8 +61,9 @@ object Functions {
     * n_probe)`: evaluates the four foldable arguments and expands to the
     * ANALYZED logical plan of [[operators.Ann.search]] — the same
     * partition-pruned scan and scoring kernel the Column API produces, so
-    * the SQL surface inherits every pushdown and the bounded-heap
-    * re-rank rather than re-deriving search semantics in the parser.
+    * the SQL surface inherits every pushdown and the driver-merged
+    * per-query top-k ([[graft.plans.PerQueryTopK]]: one job, no shuffle)
+    * rather than re-deriving search semantics in the parser.
     * (The closest public analog is Spark's own range(...) TVF expanding
     * to a logical Range node.) Index build-if-absent and the driver-side
     * probe (one query-vector collect) run at expansion, like any view
@@ -83,8 +84,11 @@ object Functions {
   /** Table-function builder for `cosine_topk(dir, max_query_id, k)` —
     * the EXACT search through the parser: expands to the planned
     * [[graft.plans.CosineTopK]] operator (custom LogicalPlan + Strategy
-    * + fused-kernel Exec), so a SQL user gets the engine's whole-operator
-    * plan node, optimizer pruning rule included. */
+    * + fused-kernel Exec) under the driver-merged
+    * [[graft.plans.PerQueryTopK]], so a SQL user gets the engine's
+    * whole-operator plan nodes, the query-pruning rule included: a
+    * `WHERE query_id < n` moves below the merge and shrinks the query
+    * set. */
   private[graft] def cosineTopKPlan(
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
@@ -159,7 +163,8 @@ object Functions {
   /** Table-function builder for `ivfpq_search(dir, max_query_id, k,
     * n_probe)` — the residual-PQ tier (v53) through the parser, its
     * third serving surface after the Column API and the persisted
-    * artifacts (v55). */
+    * artifacts (v55). Expands to [[operators.Pq.fusedSearch]]: one pass
+    * over the probed lists, then the driver-merged per-query top-k. */
   private[graft] def ivfpqSearchPlan(
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {

@@ -689,12 +689,13 @@ object Ann extends QModule {
       dots)
   }
 
-  /** V3/V5 search: top-k per query with nProbe probed partitions. Final
-    * rank via the bounded-heap aggregate — no per-query window sort.
+  /** V3/V5 search: top-k per query with nProbe probed partitions. The
+    * final rank is the driver-merged [[graft.plans.PerQueryTopK]]:
+    * partition-local heaps, one job, no shuffle.
     * @return (query_id, doc_id, score, rnk) */
   def search(s: SparkSession, d: String, maxQueryId: Int, k: Int, nProbe: Int,
       pred: Option[Column] = None): DataFrame =
-    BruteForce.rerank(
+    graft.plans.PerQueryTopK.exact(
       scoredCandidates(s, d, maxQueryId, nProbe, pred).drop("prn"), k)
 
   /** V7 with the TIMING dimension (VERDICT r3 missing #1): per nProbe

@@ -39,7 +39,8 @@ import graft.functions.TopKAgg
   * ([[VectorSearch.rescoreExact]]) still joins the candidates against a
   * full scan of the float corpus; the IVF+PQ tier keeps each row's float
   * vector beside its codes and rescores inside the ADC pass, reading no
-  * float vector outside its probed lists ([[searchIvfPq]]).
+  * float vector outside its probed lists, and merges per query on the
+  * driver ([[searchIvfPq]], [[graft.plans.PerQueryTopK]]).
   *
   * 100 TB design: training cost is one encode pass per Lloyd step with
   * only centroid-cell averages shuffled; encode is one narrow pass with
@@ -545,12 +546,11 @@ object Pq extends QModule {
     * ([[Ann.probeLists]]); the scan keeps only the probed lists' rows.
     * One partition pass ([[fusedPartition]]) emits each partition's
     * per-query top-[[RCand]] by approx score with their exact scores;
-    * one grouping step per query ([[mergeQuery]]) keeps the global
+    * the driver-merged [[graft.plans.PerQueryTopK]] keeps the global
     * top-`rcand` by approx and returns the exact top-k among them. A
     * partition's top-[[RCand]] holds every global top-`rcand` member it
-    * contains, so the answer is independent of partitioning. Rows of
-    * unprobed lists are filtered out before the kernel deserializes
-    * anything.
+    * contains, so the answer is independent of partitioning. The call
+    * runs as one job with no shuffle.
     * @return (query_id, doc_id, score DOUBLE, rnk BIGINT) */
   private[graft] def fusedSearch(
       frame: DataFrame,
@@ -560,9 +560,22 @@ object Pq extends QModule {
       k: Int,
       nProbe: Int,
       rcand: Int): DataFrame = {
+    require(rcand <= RCand, s"rcand $rcand exceeds the per-partition ADC heap bound $RCand")
+    graft.plans.PerQueryTopK.of(fusedCandidates(frame, rcb, cents, queries, nProbe), k, rcand)
+  }
+
+  /** [[fusedSearch]]'s candidates before the per-query merge: the
+    * probed-list filter and [[fusedPartition]]. Rows of unprobed lists
+    * are filtered out before the kernel deserializes anything.
+    * @return (query_id, doc_id, approx, score) */
+  private[graft] def fusedCandidates(
+      frame: DataFrame,
+      rcb: Array[(Long, Array[Double])],
+      cents: Array[(Long, Array[Float])],
+      queries: Array[(Long, Array[Float])],
+      nProbe: Int): DataFrame = {
     val s = frame.sparkSession
     import s.implicits._
-    require(rcand <= RCand, s"rcand $rcand exceeds the per-partition ADC heap bound $RCand")
     val probes = Ann.probeLists(queries, cents, nProbe)
     val bc = s.sparkContext.broadcast((queries, rcb, probes.lists, probes.dots))
     frame
@@ -573,9 +586,7 @@ object Pq extends QModule {
         val (qs, cb, lists, dots) = bc.value
         fusedPartition(rows, qs, cb, lists, dots)
       }
-      .groupByKey(_._1)
-      .flatMapGroups((qid, rows) => mergeQuery(qid, rows, rcand, k))
-      .toDF("query_id", "doc_id", "score", "rnk")
+      .toDF("query_id", "doc_id", "approx", "score")
   }
 
   /** One partition of [[fusedSearch]]: each row is ADC-scored only by
@@ -642,21 +653,6 @@ object Pq extends QModule {
       }
       out.iterator
     }
-  }
-
-  /** One query's global step in [[fusedSearch]]: the top-`rcand` of
-    * every partition's candidates by (approx desc, doc_id asc), then the
-    * exact top-k among them by (score desc, doc_id asc), ranked from 1. */
-  private def mergeQuery(qid: Long, rows: Iterator[(Long, Long, Double, Double)],
-      rcand: Int, k: Int): Iterator[(Long, Long, Double, Long)] = {
-    val pool = new TopKAgg.Heap(rcand)
-    val exact = scala.collection.mutable.HashMap.empty[Long, Double]
-    rows.foreach { case (_, docId, approx, score) =>
-      if (pool.offer(approx, docId)) exact(docId) = score
-    }
-    val top = new TopKAgg.Heap(k)
-    pool.foreach((_, docId) => top.offer(exact(docId), docId))
-    top.sortedDesc().iterator.zipWithIndex.map { case ((sc, docId), r) => (qid, docId, sc, r + 1L) }
   }
 
   /** The IVF+PQ artifact directory. The `_refine` suffix marks the layout

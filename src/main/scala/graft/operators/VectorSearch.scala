@@ -19,9 +19,10 @@ import graft.functions.VectorFunctions._
   * verified, mirroring `utils.py:15-110`).
   *
   * Scale notes (100 TB design): the query side is always the small side →
-  * broadcast; the corpus side streams. Top-k runs on the fused
-  * mapPartitions kernel with per-partition bounded heaps ([[BruteForce]])
-  * so no full sort or q×n shuffle ever happens; the crossJoin+window form
+  * broadcast; the corpus side streams. Top-k runs on the fused kernel
+  * with per-partition bounded heaps ([[graft.plans.CosineTopK]]) and
+  * merges per query on the driver ([[graft.plans.PerQueryTopK]]), so no
+  * full sort and no shuffle ever happens; the crossJoin+window form
   * survives as [[topKWindow]], the plan-level oracle the kernel is
   * cross-checked against in tests.
   */
@@ -130,16 +131,17 @@ object VectorSearch extends QModule {
 
   /** Top-k search frame: (query_id, doc_id, score, rnk) for queries with
     * vec_id < maxQueryId, top-k by dot product (embeddings are
-    * pre-normalized so dot ≡ cosine; asserted in tests). Executes on the
-    * fused [[BruteForce]] kernel. */
+    * pre-normalized so dot ≡ cosine; asserted in tests). Executes as
+    * one job: the fused candidate kernel, then the driver-merged
+    * per-query top-k. */
   def topK(s: SparkSession, d: String, maxQueryId: Int, k: Int): DataFrame = {
     import s.implicits._
     val corpus = emb(s, d).select($"vec_id".as("id"), $"embedding".as("vec"))
     val qs = queryVectors(s, d, maxQueryId).toSeq
-    // the planned-operator form (CosineCandidates node + strategy + exec)
-    // — same kernel arithmetic as BruteForce.topK (equivalence tested),
-    // but visible to Catalyst: EXPLAIN shows the node and the
-    // PruneCosineQueries rule can shrink its query set
+    // the planned-operator form (CosineCandidates node + strategy + exec,
+    // under PerQueryTopK) — same kernel arithmetic as BruteForce.topK
+    // (equivalence tested), but visible to Catalyst: EXPLAIN shows the
+    // nodes and the PruneCosineQueries rule can shrink the query set
     graft.plans.CosineTopK.topK(corpus, qs, k, excludeSelf = true)
   }
 

@@ -18,7 +18,9 @@ import graft.operators.BruteForce
   * physical `CosineCandidatesExec` running the fused kernel loop over the
   * child's rows — registered through `SparkSessionExtensions` /
   * `experimental` so `graft.plans.CosineTopK.topK(df, …)` plans like any
-  * built-in operator and Catalyst can see through it.
+  * built-in operator and Catalyst can see through it. The candidates
+  * feed the driver-merged [[PerQueryTopK]] node, so a search runs as one
+  * job with no shuffle.
   *
   * Semantics are identical to [[BruteForce.topK]] (same loop, same heap,
   * same tie-breaks) — equivalence is asserted in tests; the point of the
@@ -54,13 +56,14 @@ object CosineTopK {
     GraftInternal.ofRows(corpus.sparkSession, node)
   }
 
-  /** Full top-k: planned candidate stage + collect_top_k re-rank. */
+  /** Full top-k: planned candidate stage + the driver-merged per-query
+    * top-k. */
   def topK(
       corpus: DataFrame,
       queries: Seq[(Long, Array[Float])],
       k: Int,
       excludeSelf: Boolean): DataFrame =
-    BruteForce.rerank(candidates(corpus, queries, k, excludeSelf), k)
+    PerQueryTopK.exact(candidates(corpus, queries, k, excludeSelf), k)
 
   /** Install strategy + pruning rule on a session built WITHOUT the
     * spark.sql.extensions mechanism (GraftSession uses this). */

@@ -57,4 +57,17 @@ class CosineTopKPlanSpec extends SparkSpec {
     // and results are right: 7 queries × 3 hits
     assert(df.count() == 21)
   }
+
+  test("a SQL query_id filter over cosine_topk moves below the merge and prunes the query set") {
+    val df = spark.sql(s"SELECT * FROM cosine_topk('$sf0001', 50, 3) WHERE query_id < 7")
+    val optimized = df.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("CosineCandidates [queries=7"),
+      s"queries not pruned from 50 to 7 at plan time:\n$optimized")
+    val rows = df.collect()
+    assert(rows.length == 21 && rows.forall(_.getLong(0) < 7))
+    // the same rows as filtering the unpruned search's result
+    val unpruned = spark.sql(s"SELECT * FROM cosine_topk('$sf0001', 50, 3)")
+      .collect().filter(_.getLong(0) < 7)
+    assert(rows.map(_.toSeq).toSet == unpruned.map(_.toSeq).toSet)
+  }
 }

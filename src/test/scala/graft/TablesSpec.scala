@@ -4,6 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.Exchange
 
 import graft.operators.{Ann, VectorSearch}
 
@@ -12,8 +14,9 @@ import graft.operators.{Ann, VectorSearch}
   * file fingerprint) and [[Ann.centroidArray]] selects the coarse
   * centroids once per (session, dir, C, fingerprint). These tests pin
   * that the memo never serves stale inputs, that warm TVF expansions
-  * run no per-call inference or centroid job (and a warm `ann_search`
-  * or `ivfpq_search` call no more than three jobs in all), and that the
+  * run no per-call inference or centroid job (and a warm `cosine_topk`,
+  * `ann_search` or `ivfpq_search` call no more than two jobs in all, as
+  * one [[graft.plans.PerQueryTopKExec]] with no shuffle), and that the
   * entries die with their session. */
 class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
@@ -164,7 +167,7 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     }
   }
 
-  test("warm TVF expansion runs at most 1 job; a warm ann_search call at most 3") {
+  test("warm TVF expansion runs at most 1 job; a warm ann_search call at most 2") {
     countingJobs { (s2, jobsDuring) =>
       // each expansion collects its query vectors (ann_search: for the
       // driver-side probe) — one job, no schema inference, no centroid scan
@@ -178,22 +181,58 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         val n = jobsDuring(s2.sql(sql))
         assert(n <= bound, s"$n jobs while expanding $sql (bound $bound)")
       }
-      // the whole call: the query collect, then the pruned index scan
-      // with its scoring kernel and the top-k merge
+      // the whole call: the query collect, then ONE job for the pruned
+      // index scan, its scoring kernel and the partition-local heaps
+      // (the per-query merge runs on the driver)
       val n = jobsDuring(s2.sql(ann).collect())
-      assert(n <= 3, s"$n jobs for a warm $ann call (bound 3)")
+      assert(n <= 2, s"$n jobs for a warm $ann call (bound 2)")
     }
   }
 
-  test("a warm ivfpq_search call runs at most 3 jobs") {
+  test("a warm ivfpq_search call runs at most 2 jobs") {
     countingJobs { (s2, jobsDuring) =>
       // the query collect at expansion, then one pass over the probed
-      // lists (ADC plus exact rescore) and the per-query merge
+      // lists (ADC plus exact rescore); the per-query merge is on the driver
       val pq = s"SELECT * FROM ivfpq_search('$sf0001', 1, 10, 8)"
       s2.sql(pq).collect() // warm up: trains, encodes and caches the frame
       val n = jobsDuring(s2.sql(pq).collect())
-      assert(n <= 3, s"$n jobs for a warm $pq call (bound 3)")
+      assert(n <= 2, s"$n jobs for a warm $pq call (bound 2)")
     }
+  }
+
+  test("a warm cosine_topk call runs at most 2 jobs") {
+    countingJobs { (s2, jobsDuring) =>
+      // the query collect at expansion, then one scan with the fused
+      // kernel and the partition-local heaps
+      val bf = s"SELECT * FROM cosine_topk('$sf0001', 1, 10)"
+      s2.sql(bf).collect()
+      val n = jobsDuring(s2.sql(bf).collect())
+      assert(n <= 2, s"$n jobs for a warm $bf call (bound 2)")
+    }
+  }
+
+  test("every served search TVF executes as one PerQueryTopKExec with no Exchange") {
+    val s2 = session()
+    try {
+      for (sql <- Seq(
+          s"SELECT * FROM cosine_topk('$sf0001', 4, 10)",
+          s"SELECT * FROM ann_search('$sf0001', 4, 10, 8)",
+          s"SELECT * FROM ivfpq_search('$sf0001', 4, 10, 8)")) {
+        val df = s2.sql(sql)
+        assert(df.collect().length == 40, sql)
+        // the root must be the exec itself: an added Project above it
+        // would send collect() through doExecute, a second job
+        val root = df.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+        assert(root.isInstanceOf[graft.plans.PerQueryTopKExec], s"$sql planned as:\n$root")
+        val shuffles = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+          case e: Exchange => e
+        }
+        assert(shuffles.isEmpty, s"$sql shuffles:\n${df.queryExecution.executedPlan}")
+      }
+    } finally Memo.drop(s2)
   }
 
   test("table-schema and centroid memo entries are dropped when their session ends") {
