@@ -73,9 +73,11 @@ object Functions {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
     val Seq(dir, maxQ, k, nProbe) =
       tvfArgs("ann_search", Seq("dir", "max_query_id", "k", "n_probe"), exprs)
+    val s = SparkSession.active
+    val d = dir.toString
     operators.Ann
-      .search(SparkSession.active, dir.toString,
-        asInt("ann_search", "max_query_id", maxQ),
+      .search(s, operators.Ann.Session(d),
+        operators.VectorSearch.queryVectors(s, d, asInt("ann_search", "max_query_id", maxQ)),
         asInt("ann_search", "k", k),
         asInt("ann_search", "n_probe", nProbe))
       .queryExecution.analyzed

@@ -25,7 +25,6 @@ case class TopKAgg(
     scoreExpr: Expression,
     idExpr: Expression,
     k: Int,
-    dedupIds: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[TopKAgg.Heap] {
@@ -38,7 +37,7 @@ case class TopKAgg(
     StructType(Seq(StructField("score", DoubleType), StructField("id", LongType))),
     containsNull = false)
 
-  override def createAggregationBuffer(): TopKAgg.Heap = new TopKAgg.Heap(k, dedupIds)
+  override def createAggregationBuffer(): TopKAgg.Heap = new TopKAgg.Heap(k)
 
   override def update(buf: TopKAgg.Heap, input: InternalRow): TopKAgg.Heap = {
     val s = scoreExpr.eval(input)
@@ -72,7 +71,7 @@ case class TopKAgg(
   override def deserialize(bytes: Array[Byte]): TopKAgg.Heap = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val n = in.readInt()
-    val heap = new TopKAgg.Heap(k, dedupIds)
+    val heap = new TopKAgg.Heap(k)
     var j = 0
     while (j < n) { heap.offer(in.readDouble(), in.readLong()); j += 1 }
     heap
@@ -91,12 +90,13 @@ object TopKAgg {
   /** Bounded worst-first heap: head = eviction candidate (lowest score,
     * then HIGHEST id). Same ordering contract as the BruteForce kernel.
     *
-    * `dedupIds` (r14): each id appears AT MOST ONCE in the heap, kept at
-    * its best score — the serving-path variant for candidate sets that
-    * can carry the same doc twice with identical vectors (a crash-window
-    * reader's debris-union mid-split; see Ann.indexFrame). OFF by
-    * default: the SQL-surfaced `collect_top_k` ranks duplicate ids as
-    * distinct rows, and the DuckDB oracles replay exactly that.
+    * `dedupIds`: each id appears AT MOST ONCE in the heap, kept at its
+    * best score (the first offer wins a tie). The per-query pool of
+    * every served search ([[graft.plans.PerQueryTopK]]) runs this way,
+    * so a doc offered twice (a crash-window reader's debris union
+    * mid-split; see Ann.indexFrame) holds one rank. OFF by default: the
+    * SQL-surfaced `collect_top_k` ranks duplicate ids as distinct rows,
+    * and the DuckDB oracles replay exactly that.
     *
     * A binary heap over parallel `double[]`/`long[]` arrays, root at
     * slot 0: an offer allocates nothing (a boxed-tuple priority queue
@@ -111,7 +111,7 @@ object TopKAgg {
     private var n = 0
     // id -> its score in the heap (dedupIds mode only)
     private val members =
-      if (dedupIds) scala.collection.mutable.HashMap.empty[Long, Double] else null
+      if (dedupIds) new scala.collection.mutable.LongMap[Double] else null
 
     /** Slot a ranks below slot b: lower score, then higher id. */
     private def worse(a: Int, b: Int): Boolean =
@@ -142,9 +142,13 @@ object TopKAgg {
 
     def size: Int = n
 
-    /** Offers one (score, id); true when the heap kept it. */
+    /** Offers one (score, id); true when the heap kept it. A full heap
+      * rejects anything not better than its root first: such an offer
+      * can neither enter nor upgrade a member (every member ranks at or
+      * above the root), so the common reject skips the member lookup. */
     def offer(score: Double, id: Long): Boolean =
-      if (dedupIds && members.contains(id)) {
+      if (n == k && !(score > scores(0) || (score == scores(0) && id < ids(0)))) false
+      else if (dedupIds && members.contains(id)) {
         if (score > members(id)) {
           // upgrade in place: a better score sinks away from the root;
           // the O(k) slot search runs only on this rare path
@@ -167,14 +171,14 @@ object TopKAgg {
         siftUp(n - 1)
         if (dedupIds) members(id) = score
         true
-      } else if (score > scores(0) || (score == scores(0) && id < ids(0))) {
+      } else {
         val evicted = ids(0)
         scores(0) = score
         ids(0) = id
         siftDown(0)
         if (dedupIds) { members.remove(evicted); members(id) = score }
         true
-      } else false
+      }
 
     /** Every member, in heap (not rank) order. */
     def foreach(f: (Double, Long) => Unit): Unit = {
@@ -211,16 +215,6 @@ object TopKAgg {
   def collectTopK(score: Column, id: Column, k: Int): Column = {
     import org.apache.spark.sql.GraftInternal
     val e = TopKAgg(GraftInternal.expression(score), GraftInternal.expression(id), k)
-    GraftInternal.column(e.toAggregateExpression())
-  }
-
-  /** [[collectTopK]] with per-id dedup (best score wins): the serving
-    * variant — a doc is ranked once however many identical candidate
-    * rows a crash-window union produced. */
-  def collectTopKDistinct(score: Column, id: Column, k: Int): Column = {
-    import org.apache.spark.sql.GraftInternal
-    val e = TopKAgg(
-      GraftInternal.expression(score), GraftInternal.expression(id), k, dedupIds = true)
     GraftInternal.column(e.toAggregateExpression())
   }
 }

@@ -563,42 +563,73 @@ object Ann extends QModule {
     }
   }
 
-  /** The index scan: (doc_id, label, embedding, centroid_id).
-    * [[scoredOn]] prunes it to the probed partitions. */
-  def loadIndex(s: SparkSession, d: String): DataFrame = {
-    val df = s.read.schema(IndexSchema).parquet(buildIndex(s, d))
-    df.withColumn("centroid_id", col("centroid_id").cast("long"))
+  // ------------------------------------------------ naming an index version
+
+  /** How a read names an index. Every IVF read ([[search]],
+    * [[graphRefinedSearch]], the sweeps) takes one of these and
+    * [[resolve]]s it once per call; the cases differ only in where the
+    * file set, the quantizer, the tombstones and the graph come from. */
+  sealed trait IndexRef
+
+  /** The registry artifact [[buildIndex]]`(s, d)`, probed with the
+    * session's memoized quantizer ([[centroidArray]]), so a warm search
+    * runs no quantizer job. */
+  final case class Session(d: String) extends IndexRef
+
+  /** The live file set at `path` ([[indexFrame]]), probed with the
+    * artifact's own frozen quantizer (its `_centroids` sidecar). */
+  final case class Latest(path: String) extends IndexRef
+
+  /** Snapshot `version` of the artifact at `path`: exactly the
+    * manifest's data files ([[manifestFiles]]) and graph edges
+    * ([[graphAtVersion]]). It has no tombstones: a snapshot pins a file
+    * set, and the mask is a live-view concern. */
+  final case class Version(path: String, version: Int) extends IndexRef
+
+  /** The artifact the alias at `dir` serves ([[resolveAlias]]), read as
+    * [[Latest]]. The pointer is read at resolution, so a planned search
+    * stays on the artifact it resolved even if the alias moves before
+    * the plan runs (v57's phase 1). */
+  final case class Alias(dir: String) extends IndexRef
+
+  /** A resolved [[IndexRef]]: the index scan `(doc_id, label,
+    * embedding, centroid_id)`, the quantizer `(centroid_id, vector)`,
+    * the tombstone set (live refs only) and the serving graph `(src,
+    * rnk, dst)`. Each part is built on first use, so a search never
+    * reads the graph and a snapshot without one still serves. */
+  final class ResolvedIndex private[Ann] (
+      index0: => DataFrame,
+      cents0: => Array[(Long, Array[Float])],
+      tombstones0: => Option[DataFrame],
+      graph0: => DataFrame) {
+    lazy val index: DataFrame = index0
+    lazy val cents: Array[(Long, Array[Float])] = cents0
+    lazy val tombstones: Option[DataFrame] = tombstones0
+    lazy val graph: DataFrame = graph0
   }
 
-  /** Scored candidates with their probe rank: (query_id, doc_id, score,
-    * prn) for probe ranks ≤ maxProbe. Probe sets are NESTED in nProbe —
-    * the nProbe=j candidate set is exactly `prn <= j` — which lets the
-    * sensitivity sweep score ONE candidate frame at the widest probe and
-    * derive every narrower probe level by filter instead of re-reading
-    * the index per level.
-    *
-    * `pred` (filtered search — the tenant/label predicate every vector
-    * database composes with top-k) applies to the INDEX rows before any
-    * scoring: a declarative filter on the pruned scan, so Catalyst pushes
-    * it into the parquet read (row-group pushdown inside the probed
-    * partitions) and the kernel never scores an excluded row. Pre-filter,
-    * not post-filter — k stays guaranteed over the filtered universe
-    * (post-filtering an unfiltered top-k can return < k, the standard
-    * filtered-ANN pitfall). */
-  def scoredCandidates(
-      s: SparkSession, d: String, maxQueryId: Int, maxProbe: Int,
-      pred: Option[Column] = None): DataFrame =
-    scoredOn(s, VectorSearch.queryVectors(s, d, maxQueryId), centroidArray(s, d),
-      loadIndex(s, d), maxProbe, pred)
-
-  /** A query frame (query_id, qe) as driver-held arrays for [[scoredOn]]. */
-  private def queryArray(q: DataFrame): Array[(Long, Array[Float])] = {
-    import q.sparkSession.implicits._
-    q.select($"query_id", $"qe").as[(Long, Array[Float])].collect()
+  /** The parts `ref` names, for one call. A [[Session]] builds the
+    * registry artifact if absent; an [[Alias]] reads its pointer now. */
+  def resolve(s: SparkSession, ref: IndexRef): ResolvedIndex = {
+    def live(path: String, cents: => Array[(Long, Array[Float])]) =
+      new ResolvedIndex(indexFrame(s, path), cents, Some(tombstonesAt(s, path)), graphAt(s, path))
+    ref match {
+      case Session(d) => live(buildIndex(s, d), centroidArray(s, d))
+      case Latest(path) => live(path, centroidsAt(s, path))
+      case Alias(dir) => resolve(s, Latest(resolveAlias(s, dir)))
+      case Version(path, version) =>
+        // `basePath` keeps the `centroid_id=` partition column (and with
+        // it partition pruning) on the listed files
+        new ResolvedIndex(
+          s.read.option("basePath", path).schema(IndexSchema)
+            .parquet(manifestFiles(s, path, version).filter(_.contains("/centroid_id=")): _*)
+            .withColumn("centroid_id", col("centroid_id").cast("long")),
+          centroidsAt(s, path), None, graphAtVersion(s, path, version))
+    }
   }
 
-  /** The probe-and-score core behind every IVF serving surface (default,
-    * live, versioned, alias, sharded, incremental, graph seeds, sweep):
+  /** The probe-and-score core of every IVF read ([[search]],
+    * [[graphRefinedSearch]]'s seeds, the v10/v36 sweeps, graph inserts):
     *  1. probe on the driver — [[probeLists]] over the driver-held
     *     queries and centroids;
     *  2. prune statically — `centroid_id IN (probed lists)` on the index
@@ -610,11 +641,22 @@ object Ann extends QModule {
     *     array-order double dot (the [[graft.Functions.vecDot]]
     *     arithmetic). Output rows carry no vector column.
     *
+    * Probe sets are NESTED in `maxProbe`: the nProbe = j candidate set is
+    * exactly `prn <= j`, so a sweep scores one frame at its widest level
+    * and derives every narrower level by filter.
+    *
+    * `pred` (filtered search) applies to the INDEX rows before any
+    * scoring: a declarative filter on the pruned scan, so Catalyst pushes
+    * it into the parquet read and the kernel never scores an excluded
+    * row. Pre-filter, not post-filter: k stays guaranteed over the
+    * filtered universe (post-filtering an unfiltered top-k can return
+    * fewer than k, the standard filtered-ANN pitfall).
+    *
     * @param queries (query_id, vector), driver-held
     * @param cents   (centroid_id, vector)
     * @param index   (doc_id, embedding, centroid_id, …) partitioned scan
     * @return (query_id, doc_id, score, prn) */
-  private[operators] def scoredOn(
+  private[graft] def scoredOn(
       s: SparkSession, queries: Array[(Long, Array[Float])], cents: Array[(Long, Array[Float])],
       index: DataFrame, maxProbe: Int, pred: Option[Column]): DataFrame = {
     import s.implicits._
@@ -689,14 +731,40 @@ object Ann extends QModule {
       dots)
   }
 
-  /** V3/V5 search: top-k per query with nProbe probed partitions. The
-    * final rank is the driver-merged [[graft.plans.PerQueryTopK]]:
-    * partition-local heaps, one job, no shuffle.
+  /** V3/V5 search, over any index version: top-k per query among the
+    * rows of its `nProbe` nearest lists. [[scoredOn]] probes, prunes and
+    * scores; `maskTombstones` drops the ref's logically deleted docs with
+    * a broadcast anti-join BEFORE the top-k, so k holds over the live
+    * universe (a post-top-k mask could return fewer than k). The rank is
+    * the driver-merged [[graft.plans.PerQueryTopK]]: partition-local
+    * heaps, one job, no shuffle, and one rank per doc, which also covers
+    * a crash-window reader whose debris union (see [[indexFrame]]) hands
+    * the same doc twice.
+    *
+    * @param queries (query_id, vector), driver-held (the registry's query
+    *                set is [[VectorSearch.queryVectors]])
     * @return (query_id, doc_id, score, rnk) */
-  def search(s: SparkSession, d: String, maxQueryId: Int, k: Int, nProbe: Int,
-      pred: Option[Column] = None): DataFrame =
-    graft.plans.PerQueryTopK.exact(
-      scoredCandidates(s, d, maxQueryId, nProbe, pred).drop("prn"), k)
+  def search(
+      s: SparkSession, ref: IndexRef, queries: Array[(Long, Array[Float])], k: Int, nProbe: Int,
+      pred: Option[Column] = None, maskTombstones: Boolean = false): DataFrame =
+    searchOn(s, resolve(s, ref), queries, k, nProbe, pred, maskTombstones)
+
+  private def searchOn(
+      s: SparkSession, r: ResolvedIndex, queries: Array[(Long, Array[Float])], k: Int, nProbe: Int,
+      pred: Option[Column], maskTombstones: Boolean): DataFrame = {
+    val cand = scoredOn(s, queries, r.cents, r.index, nProbe, pred).drop("prn")
+    graft.plans.PerQueryTopK.exact(masked(r, cand, maskTombstones), k)
+  }
+
+  /** (query_id, doc_id, score) candidates without the ref's tombstoned
+    * docs, when `on` and the ref has tombstones. */
+  private def masked(r: ResolvedIndex, cand: DataFrame, on: Boolean): DataFrame =
+    if (!on) cand
+    else r.tombstones.fold(cand) { tomb =>
+      // the using-join puts doc_id first; PerQueryTopK reads positionally
+      cand.join(broadcast(tomb.select(col("doc_id")).distinct()), Seq("doc_id"), "left_anti")
+        .select(col("query_id"), col("doc_id"), col("score"))
+    }
 
   /** V7 with the TIMING dimension (VERDICT r3 missing #1): per nProbe
     * level, run a FRESH partition-pruned search (each level really reads
@@ -710,12 +778,13 @@ object Ann extends QModule {
     val rel = VectorSearch.relevant(s, d, maxQueryId = 100)
     val nRel = rel.groupBy($"query_id").agg(count(lit(1)).as("n_rel"))
     buildIndex(s, d) // build-if-absent outside the timed region
+    val queries = VectorSearch.queryVectors(s, d, 100)
     // time each level's search on its own (cache + count = the level's
     // wall cost); evaluate recall for ALL levels in ONE unioned
     // aggregation afterwards — evaluation is not part of the reference's
     // timed region either (`003:408-458` times search, evaluates after)
     val timed = SweepProbes.map { np =>
-      val frame = search(s, d, maxQueryId = 100, k = 10, nProbe = np).cache()
+      val frame = search(s, Session(d), queries, k = 10, nProbe = np).cache()
       val t0 = System.nanoTime()
       val rows = frame.count()
       // k results per searched query (corpus ≫ k at every fixture SF) —
@@ -903,26 +972,14 @@ object Ann extends QModule {
       }
       .start()
 
-  /** Search through the incrementally-built index: probes the FROZEN
-    * persisted quantizer (O(C) read, no corpus scan) against the merged
-    * base+delta partitions. Same probe/score/rerank core as [[search]]. */
-  def searchIncremental(
-      s: SparkSession, d: String, maxQueryId: Int, k: Int, nProbe: Int): DataFrame = {
-    val path = buildIncrementalIndex(s, d)
-    val idx = s.read.schema(IndexSchema).parquet(path)
-      .withColumn("centroid_id", col("centroid_id").cast("long"))
-    BruteForce.rerank(scoredOn(s, VectorSearch.queryVectors(s, d, maxQueryId),
-      centroidsAt(s, path), idx, nProbe, None).drop("prn"), k)
-  }
-
   // ---------------------------------------------- index lifecycle: delete
 
   /** Logical delete: append the doc_ids matching `pred` (evaluated over
     * the live index rows) to the artifact's tombstone set — an
     * underscore-prefixed parquet dir the data scan never sees. Deletes
     * are O(|deleted|): no index partition is read back, moved, or
-    * rewritten; [[searchLive]] masks tombstoned rows at query time and
-    * [[compactIndex]] reclaims the space. Appending twice is harmless
+    * rewritten; [[search]] with `maskTombstones` drops them at query
+    * time and [[compactIndex]] reclaims the space. Appending twice is harmless
     * (the mask is a set); the tombstone set stays broadcast-small
     * between compactions — the compaction cadence is the bound. */
   def deleteFromIndex(s: SparkSession, d: String, pred: Column): Unit =
@@ -947,8 +1004,7 @@ object Ann extends QModule {
     }
 
   /** The artifact's live data scan at `path` (doc_id, label, embedding,
-    * centroid_id) — [[loadIndex]] without the build-if-absent tie to the
-    * registry corpus.
+    * centroid_id): what a [[Session]] or [[Latest]] ref reads.
     *
     * CRASH-WINDOW FALLBACK (VERDICT r13 next #6 — reader correctness AT
     * the crash state, not just after recovery): the rewrite verbs move
@@ -982,8 +1038,9 @@ object Ann extends QModule {
     * whole-dir rename landing between the two left a reader silently
     * missing the moved partition (an unlisted directory is not an
     * error). Two structural closures: (1) the compactions no longer
-    * move partition dirs at all (add-before-remove file swap +
-    * rerankDistinct — the dir always holds at least the survivor set);
+    * move partition dirs at all (add-before-remove file swap, and the
+    * served rank is one per doc — the dir always holds at least the
+    * survivor set);
     * (2) for the verbs that DO move dirs (the split's retire, whose
     * rollback-copy semantics need the whole-dir rename), the body below
     * is LIST-THEN-CHECK: the leaf-file listing is materialized first
@@ -1081,11 +1138,11 @@ object Ann extends QModule {
     * re-lists the now-consistent file set. In production the collision
     * window is the microseconds a single partition spends mid-rename —
     * one retry clears it; `attempts` bounds the pathological case and
-    * the final failure rethrows loudly. The snapshot / alias surfaces
-    * (searchAtPath, alias cutover — v57/v58) stay the fully isolated
-    * serving path: immutable file sets, no retry needed. A `body`
-    * whose plan was built OUTSIDE the call retries against the same
-    * stale listing and cannot converge — build the frame inside. */
+    * the final failure rethrows loudly. A [[Version]] ref (v38) is the
+    * fully isolated serving path: an immutable file set, no retry
+    * needed. A `body` whose plan was built OUTSIDE the call retries
+    * against the same stale listing and cannot converge — build the
+    * frame inside. */
   def withLiveReadRetry[T](attempts: Int = 5)(body: => T): T = {
     var left = math.max(1, attempts)
     var lastMissing: String = null
@@ -1190,59 +1247,14 @@ object Ann extends QModule {
       }
   }
 
-  /** [[search]] with logical deletes applied: a broadcast anti-join of
-    * the scored candidates against the tombstone set, BEFORE the top-k
-    * rerank — so k is guaranteed over the live universe (a post-top-k
-    * mask could return < k). The anti-join rides on the candidate frame
-    * [[scoredOn]] emits, after its statically pruned index scan. */
-  def searchLive(
-      s: SparkSession, d: String, maxQueryId: Int, k: Int, nProbe: Int): DataFrame = {
-    val cand = scoredCandidates(s, d, maxQueryId, nProbe).drop("prn")
-    val tomb = tombstones(s, d).select(col("doc_id")).distinct()
-    // rerankDistinct (round 14): during a live compaction's
-    // add-before-remove swap a partition briefly holds a survivor in
-    // BOTH its old and its minted file (identical vectors, identical
-    // scores) — one rank each doc, never two
-    BruteForce.rerankDistinct(cand.join(broadcast(tomb), Seq("doc_id"), "left_anti"), k)
-  }
-
-  /** Tombstone-masked search over an arbitrary artifact: the
-    * [[searchLive]] plan against `path`'s own frozen quantizer and live
-    * file set. */
-  def searchLiveAt(
-      s: SparkSession, d: String, path: String,
-      maxQueryId: Int, k: Int, nProbe: Int): DataFrame = {
-    val cand = scoredOn(s, VectorSearch.queryVectors(s, d, maxQueryId), centroidsAt(s, path),
-      indexFrame(s, path), nProbe, None).drop("prn")
-    val tomb = tombstonesAt(s, path).select(col("doc_id")).distinct()
-    // rerankDistinct: see [[searchLive]] (mid-swap duplicate masking)
-    BruteForce.rerankDistinct(cand.join(broadcast(tomb), Seq("doc_id"), "left_anti"), k)
-  }
-
-  /** Time-travel search over an arbitrary artifact: the probe/score/
-    * rerank core over exactly snapshot `version`'s file set. */
-  def searchAtPath(
-      s: SparkSession, d: String, path: String, version: Int,
-      maxQueryId: Int, k: Int, nProbe: Int): DataFrame = {
-    // rerankDistinct, not rerank (ADVICE r14 #1): a manifest written
-    // while a crashed add-first swap was still unhealed pins BOTH the
-    // old and the minted copy of each survivor — identical vectors,
-    // identical scores. The heal now runs before any re-manifest
-    // (healPendingRemanifest → recoverCompacting), so such manifests
-    // should no longer be written; this is the belt-and-braces that
-    // keeps the one-rank contract on any that exist.
-    BruteForce.rerankDistinct(
-      scoredOn(s, VectorSearch.queryVectors(s, d, maxQueryId), centroidsAt(s, path),
-        loadIndexAt(s, path, version), nProbe, None).drop("prn"), k)
-  }
-
   /** Physical reclaim of tombstoned rows — PARTITION-LOCAL: only the
     * centroid partitions that actually contain tombstoned docs (an O(C)
     * driver-side list) are read and rewritten; untouched partitions'
     * files are never opened. Survivors are written to a side dir and
     * swapped in with Hadoop-FS renames (a partition whose rows were all
     * deleted simply disappears), then the tombstone set is cleared.
-    * After compaction [[searchLive]] ≡ [[search]] by construction. */
+    * After compaction, [[search]] with and without `maskTombstones`
+    * agree by construction. */
   def compactIndex(s: SparkSession, d: String): Unit =
     compactIndexAt(s, buildIndex(s, d))
 
@@ -1289,7 +1301,7 @@ object Ann extends QModule {
     * INTO the live partition (skip-if-present — retry-idempotent); (3)
     * every file NOT in the minted set is deleted. A reader now sees
     * old-only, old+minted (each survivor twice with identical vectors —
-    * one rank via the serving paths' rerankDistinct), or minted-only —
+    * one rank, since the served top-k ranks each doc once), or minted-only —
     * always at least the full survivor set; a file-level race is a loud
     * FAILED_READ_FILE healed by [[withLiveReadRetry]], never a silent
     * hole. Fully-rewritten-away partitions (no side output) are the
@@ -1388,7 +1400,7 @@ object Ann extends QModule {
           // any nesting of crashes (r13 third review)
           fs.create(new org.apache.hadoop.fs.Path(s"$path/_remanifest_pending"), true).close()
           // add-before-remove, like the verb itself: live readers keep a
-          // complete (possibly briefly duplicated, rerankDistinct-masked)
+          // complete (possibly briefly duplicated, one rank per doc)
           // view through the roll-forward too
           addFirstSwap(fs, path, side)
           rolled = true
@@ -1675,7 +1687,7 @@ object Ann extends QModule {
   /** STREAMING ingest that keeps BOTH the index and the graph sidecar
     * fresh: each micro-batch is assigned + appended ([[addVectors]]) and
     * then graph-inserted ([[addToGraphAt]]) — a streamed vector is
-    * immediately reachable through [[graphRefinedSearchAt]], no bulk
+    * immediately reachable through [[graphRefinedSearch]], no bulk
     * rebuild. Edge sets are insert-order dependent (a batch-1 vector's
     * out-edges can't see batch 2 — the same order dependence as any
     * incremental graph insert, hnswlib included); the read contract's
@@ -1774,7 +1786,7 @@ object Ann extends QModule {
     * turned on the artifact itself: sample `nSample` live docs as
     * queries (deterministic: smallest [[graft.Functions.keyLcgU]]
     * variate, ties id-asc — the q28 seeded-sampling seam), compute
-    * exact ground truth by FULL-probe [[searchArtifact]] over the same
+    * exact ground truth by a FULL-probe masked [[search]] over the same
     * live rows (every list scanned + exact dots + exact rerank = exact
     * by construction; queries are corpus members, so the self-match
     * occupies one slot of BOTH sides identically), then walk a
@@ -1805,16 +1817,17 @@ object Ann extends QModule {
       .as[(Long, Array[Float])]
       .collect()
     require(sample.nonEmpty, s"recallProbeAt on an empty artifact: $path")
-    val q = s.createDataset(sample.toSeq).toDF("query_id", "qe")
     val cCount = centroidsFrame(s, path).count().toInt
     val full = math.max(cCount, 1)
     val ladder =
       (Iterator.iterate(1)(_ * 2).takeWhile(_ < full) ++ Iterator(full)).toSeq
-    val exact = searchArtifact(s, q, path, k, full)
+    def served(dial: Int) =
+      search(s, Latest(path), sample, k, dial, maskTombstones = true)
+    val exact = served(full)
       .select($"query_id", $"doc_id")
       .as[(Long, Long)].collect().toSet
     def osumAt(dial: Int): Long =
-      searchArtifact(s, q, path, k, dial)
+      served(dial)
         .select($"query_id", $"doc_id")
         .as[(Long, Long)].collect()
         .count(exact.contains).toLong
@@ -1865,7 +1878,7 @@ object Ann extends QModule {
   /** Latest recommended serving dial from the quality log, or `default`
     * when the artifact has never been probed — the consumer-side hook
     * that closes the loop: serve with
-    * `searchArtifact(..., nProbe = latestRecommendedProbeAt(...))`. */
+    * `search(s, Latest(path), …, nProbe = latestRecommendedProbeAt(…))`. */
   def latestRecommendedProbeAt(s: SparkSession, path: String, default: Int): Int = {
     import s.implicits._
     recallLogAt(s, path)
@@ -2076,27 +2089,6 @@ object Ann extends QModule {
       graphServing(s, path).select($"src", $"rnk", $"dst")
   }
 
-  /** Plain tombstone-masked top-k over an artifact for an ARBITRARY
-    * query frame (query_id, qe) — [[searchLiveAt]] without the
-    * registry-corpus query tie; the seed stage of
-    * [[graphRefinedSearchAt]] and the baseline its specs compare
-    * against. `maskTombstones = false` serves the v09-style UNMASKED
-    * view (the registry artifact carries v21's persistent tombstones,
-    * which plain `search` ignores by contract). */
-  def searchArtifact(
-      s: SparkSession, q: DataFrame, path: String, k: Int, nProbe: Int,
-      maskTombstones: Boolean = true, pred: Option[Column] = None): DataFrame = {
-    val cand = scoredOn(s, queryArray(q), centroidsAt(s, path), indexFrame(s, path), nProbe, pred)
-      .drop("prn")
-    val live =
-      if (maskTombstones) {
-        val tomb = tombstonesAt(s, path).select(col("doc_id")).distinct()
-        cand.join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      } else cand
-    // rerankDistinct: see [[searchLive]] (mid-swap duplicate masking)
-    BruteForce.rerankDistinct(live, k)
-  }
-
   /** Persist the session quantizer as the registry artifact's
     * `_centroids` sidecar (build-if-absent) — [[buildIndex]] predates
     * the path-form lifecycle ops, which all read the quantizer from the
@@ -2113,68 +2105,64 @@ object Ann extends QModule {
     path
   }
 
-  /** Graph-refined search over an artifact (the v33 plan shape, served
-    * from the PERSISTED sidecar): a narrow seed search expands one hop
-    * over [[graphAt]], the union is exact-rescored from the artifact's
-    * own rows, tombstones masked, top-k re-ranked. A vector added via
-    * [[addVectors]] + [[addToGraphAt]] is reachable HERE without any
-    * bulk rebuild — via its own out-edges when seeded, and via its
-    * appended in-edges when its neighbors are seeded (the spec pins the
-    * latter on a navigable corpus). Candidates stay query-bounded
-    * (≤ q·seedK·(1+[[GraphDegree]])), so they broadcast into the
-    * corpus-sided rescore fetch — the artifact never shuffles.
+  /** Graph-refined search over any index version (the v33 plan shape,
+    * served from the PERSISTED graph sidecar): a narrow seed [[search]]
+    * expands one hop over the ref's graph ([[graphAt]], or
+    * [[graphAtVersion]] for a snapshot), the union is exact-rescored from
+    * the ref's own rows, tombstones masked when asked, and the top-k
+    * ranked by [[graft.plans.PerQueryTopK]] (one rank per doc: at a
+    * mid-split crash state the debris union hands the same doc twice,
+    * and the rescore's doc_id join finds both). Every stage reads the
+    * one resolved ref, so an as-of answer is blind to post-snapshot data
+    * files AND post-snapshot edge appends (AnnGraphSpec pins both). A
+    * vector added via [[addVectors]] + [[addToGraphAt]] is reachable
+    * here without any bulk rebuild — via its own out-edges when seeded,
+    * and via its appended in-edges when its neighbors are seeded.
+    * Candidates stay query-bounded (≤ q·seedK·(1+[[GraphDegree]])), so
+    * they broadcast into the corpus-sided rescore fetch — the artifact
+    * never shuffles.
     *
     * `excludeSelf` (ADVICE r10): the v33-style corpus-member-query
     * convention drops candidates whose doc_id equals the query_id —
     * correct ONLY when query ids live in the doc-id space (each query IS
-    * a corpus row). Pass `false` for external query frames whose ids
-    * merely coincide with doc ids (e.g. 0-based query numbering), or the
+    * a corpus row). Pass `false` for external queries whose ids merely
+    * coincide with doc ids (e.g. 0-based query numbering), or the
     * colliding candidate is silently lost despite being a different
     * vector.
     *
     * `pred` (v47): a metadata predicate composed with graph-refined
-    * search — the filtered form every production vector database also
-    * needs on its graph tier. Pre-filter discipline on BOTH stages:
-    * seeds come from the filtered universe (pred pushed into the pruned
-    * probe scan — k stays guaranteed over that universe within the
-    * probe set), and the exact rescore re-applies pred on the index
-    * side, because the UNFILTERED graph's one-hop expansion can lead
-    * OUT of the filtered universe (an edge dst violating pred must
-    * never be served). The graph itself stays unfiltered — edges encode
-    * corpus geometry, not tenancy, so one sidecar serves every
-    * predicate: a filtered seed reaches its filtered true neighbor in
-    * an UNPROBED list through the same geometry edge an unfiltered
-    * search would use, which is exactly the across-list rescue filtered
-    * search loses at a thin dial. */
-  def graphRefinedSearchAt(
-      s: SparkSession, q: DataFrame, path: String, k: Int, nProbe: Int,
-      seedK: Int, maskTombstones: Boolean = true,
-      excludeSelf: Boolean = true, pred: Option[Column] = None): DataFrame = {
+    * search. Pre-filter discipline on BOTH stages: seeds come from the
+    * filtered universe (pred pushed into the pruned probe scan), and the
+    * exact rescore re-applies pred on the index side, because the
+    * UNFILTERED graph's one-hop expansion can lead OUT of the filtered
+    * universe (an edge dst violating pred must never be served). The
+    * graph itself stays unfiltered — edges encode corpus geometry, not
+    * tenancy, so one sidecar serves every predicate: a filtered seed
+    * reaches its filtered true neighbor in an UNPROBED list through the
+    * same geometry edge an unfiltered search would use, which is exactly
+    * the across-list rescue filtered search loses at a thin dial.
+    *
+    * @return (query_id, doc_id, score, rnk) */
+  def graphRefinedSearch(
+      s: SparkSession, ref: IndexRef, queries: Array[(Long, Array[Float])], k: Int, nProbe: Int,
+      seedK: Int, maskTombstones: Boolean = false, excludeSelf: Boolean = true,
+      pred: Option[Column] = None): DataFrame = {
     import s.implicits._
-    val seeds = searchArtifact(s, q, path, seedK, nProbe, maskTombstones, pred)
+    val r = resolve(s, ref)
+    val seeds = searchOn(s, r, queries, seedK, nProbe, pred, maskTombstones)
       .select($"query_id", $"doc_id")
     val expanded = seeds.as("s")
-      .join(graphAt(s, path).as("g"), col("s.doc_id") === col("g.src"))
+      .join(r.graph.as("g"), col("s.doc_id") === col("g.src"))
       .select(col("s.query_id").as("query_id"), col("g.dst").as("doc_id"))
     val cand0 = seeds.union(expanded).distinct()
     val cand = // corpus-member queries (v33 style) — see excludeSelf doc
       if (excludeSelf) cand0.filter($"query_id" =!= $"doc_id") else cand0
-    val scored = pred.foldLeft(indexFrame(s, path))(_ filter _)
+    val scored = pred.foldLeft(r.index)(_ filter _)
       .select($"doc_id", $"embedding".as("de"))
       .join(broadcast(cand), Seq("doc_id"))
-      .join(broadcast(q), Seq("query_id"))
+      .join(broadcast(queries.toSeq.toDF("query_id", "qe")), Seq("query_id"))
       .select($"query_id", $"doc_id", Functions.vecDot($"qe", $"de").as("score"))
-    val live =
-      if (maskTombstones) {
-        val tomb = tombstonesAt(s, path).select(col("doc_id")).distinct()
-        scored.join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      } else scored
-    // rerankDistinct, not rerank (r14 review #2): the rescore above JOINS
-    // candidates against the FULL live scan by doc_id — at a mid-split
-    // crash state indexFrame's debris-union hands the same doc twice
-    // (retired source + minted list, identical vectors), and the plain
-    // heap would serve it at two ranks, dropping a true k-th neighbor
-    BruteForce.rerankDistinct(live, k)
+    graft.plans.PerQueryTopK.exact(masked(r, scored, maskTombstones), k)
   }
 
   // -------------------------------------------- index lifecycle: rebalance
@@ -2455,7 +2443,7 @@ object Ann extends QModule {
     // pinning the old partition files is now stale, and an as-of read
     // against the NEW _centroids over the OLD file set would be silently
     // wrong — expire exactly the invalidated manifests and re-manifest
-    // (VERDICT r11 next #6: this is the invariant graphRefinedSearchAsOf
+    // (VERDICT r11 next #6: this is the invariant every [[Version]] read
     // depends on, now enforced at every centroid rewrite)
     remanifestAfterRewrite(s, path)
     // the swap committed: the retired source lists are garbage now
@@ -2534,7 +2522,7 @@ object Ann extends QModule {
     "v08_ann_build",
     (s, d) => {
       import s.implicits._
-      loadIndex(s, d)
+      resolve(s, Session(d)).index
         .groupBy($"centroid_id")
         .agg(count(lit(1)).as("n_vecs"))
         .orderBy($"centroid_id")
@@ -2557,7 +2545,7 @@ object Ann extends QModule {
     "v32_index_stats",
     (s, d) => {
       import s.implicits._
-      loadIndex(s, d)
+      resolve(s, Session(d)).index
         .groupBy($"centroid_id")
         .agg(count(lit(1)).as("nc"))
         .agg(
@@ -2584,7 +2572,7 @@ object Ann extends QModule {
   /** V3/V5 search: top-10 for queries vec_id < 20 at nProbe = 4. */
   private val v09 = Q(
     "v09_ann_topk",
-    (s, d) => search(s, d, maxQueryId = 20, k = 10, nProbe = 4)
+    (s, d) => search(s, Session(d), VectorSearch.queryVectors(s, d, 20), k = 10, nProbe = 4)
       .select(col("query_id"), col("rnk"), col("doc_id")),
     Some(s"""WITH $duckCentAssign
       SELECT query_id, rnk, doc_id FROM (${duckSearch(20, 10, 4)}) ORDER BY query_id, rnk"""))
@@ -2604,6 +2592,23 @@ object Ann extends QModule {
     */
   val SweepProbes = Seq(1, 2, 4, 8, 16)
 
+  /** v10/v36's per-level top-10 for the queries vec_id < 100: (query_id,
+    * doc_id, score, rnk, n_probe). ONE partition-pruned scoring pass at
+    * the widest probe level; each level is a `prn` filter plus a top-k
+    * of that frame (probe sets are nested prefixes — see [[scoredOn]]).
+    * The frame is memoized per session, so repeated invocations reuse
+    * ONE cached copy, evicted on session stop (ADVICE r2). */
+  private def sweepLevels(s: SparkSession, d: String): DataFrame = {
+    val cand = graft.Memo.cached(s, s"ann-cand:$d") {
+      val r = resolve(s, Session(d))
+      scoredOn(s, VectorSearch.queryVectors(s, d, 100), r.cents, r.index, SweepProbes.max, None)
+    }
+    SweepProbes.map { np =>
+      graft.plans.PerQueryTopK.exact(cand.filter(col("prn") <= np).drop("prn"), k = 10)
+        .withColumn("n_probe", lit(np))
+    }.reduce(_ unionByName _)
+  }
+
   private val v10 = Q(
     "v10_probe_sweep",
     (s, d) => {
@@ -2613,19 +2618,7 @@ object Ann extends QModule {
       val exact = VectorSearch.searchFrame(s, d) // cached exact frame, maxQ=100
         .filter($"rnk" <= 10) // overlap_10 compares against the exact TOP-10
         .select($"query_id", $"doc_id", lit(1).as("in_exact"))
-      // ONE partition-pruned scoring pass at the widest probe level; each
-      // sweep level is a prn-filter + heap re-rank of the cached frame
-      // (probe sets are nested prefixes — see scoredCandidates). Memoized
-      // per session so repeated invocations reuse ONE cached copy, evicted
-      // on session stop (ADVICE r2).
-      val cand = graft.Memo.cached(s, s"ann-cand:$d")(
-        scoredCandidates(s, d, maxQueryId = 100, maxProbe = SweepProbes.max))
-      val frames = SweepProbes.map { np =>
-        BruteForce.rerank(cand.filter($"prn" <= np).drop("prn"), k = 10)
-          .withColumn("n_probe", lit(np))
-      }
-      val all = frames.reduce(_ unionByName _)
-      all
+      sweepLevels(s, d)
         .join(rel.withColumn("hit", lit(1)), Seq("query_id", "doc_id"), "left_outer")
         .na.fill(0, Seq("hit"))
         .join(exact, Seq("query_id", "doc_id"), "left_outer")
@@ -2706,7 +2699,7 @@ object Ann extends QModule {
     * the filtered universe within the probe set. */
   private val v19 = Q(
     "v19_filtered_ann",
-    (s, d) => search(s, d, maxQueryId = 20, k = 10, nProbe = 8,
+    (s, d) => search(s, Session(d), VectorSearch.queryVectors(s, d, 20), k = 10, nProbe = 8,
         pred = Some(col("label") % 3 === 0))
       .select(col("query_id"), col("rnk"), col("doc_id")),
     Some(s"""WITH $duckCentAssign
@@ -2725,7 +2718,8 @@ object Ann extends QModule {
     * partitions) hash-mismatches. */
   private val v20 = Q(
     "v20_incremental_add",
-    (s, d) => searchIncremental(s, d, maxQueryId = 20, k = 10, nProbe = 4)
+    (s, d) => search(s, Latest(buildIncrementalIndex(s, d)), VectorSearch.queryVectors(s, d, 20),
+        k = 10, nProbe = 4)
       .select(col("query_id"), col("rnk"), col("doc_id")),
     Some(s"""WITH ${duckCentAssignBase(s"vec_id % $IncrMod <> $IncrRem")}
       SELECT query_id, rnk, doc_id FROM (${duckSearch(20, 10, 4)})
@@ -2745,7 +2739,8 @@ object Ann extends QModule {
     "v21_delete_search",
     (s, d) => {
       deleteFromIndex(s, d, col("doc_id") % 17 === 3)
-      searchLive(s, d, maxQueryId = 20, k = 10, nProbe = 4)
+      search(s, Session(d), VectorSearch.queryVectors(s, d, 20), k = 10, nProbe = 4,
+          maskTombstones = true)
         .select(col("query_id"), col("rnk"), col("doc_id"))
     },
     Some(s"""WITH $duckCentAssign
@@ -2779,13 +2774,7 @@ object Ann extends QModule {
       val exact = VectorSearch.searchFrame(s, d)
         .filter($"rnk" <= 10)
         .select($"query_id", $"doc_id", lit(1).as("in_exact"))
-      val cand = graft.Memo.cached(s, s"ann-cand:$d")(
-        scoredCandidates(s, d, maxQueryId = 100, maxProbe = SweepProbes.max))
-      val frames = SweepProbes.map { np =>
-        BruteForce.rerank(cand.filter($"prn" <= np).drop("prn"), k = 10)
-          .withColumn("n_probe", lit(np))
-      }
-      val po = frames.reduce(_ unionByName _)
+      val po = sweepLevels(s, d)
         .join(exact, Seq("query_id", "doc_id"), "left_outer")
         .na.fill(0, Seq("in_exact"))
         .groupBy($"n_probe", $"query_id")
@@ -2873,36 +2862,22 @@ object Ann extends QModule {
     *  2. widen: nEff = [[adaptiveProbes]] — expected surviving
     *     candidates per query stay at the unfiltered level;
     *  3. CROSSOVER: when nEff reaches [[Centroids]] the probe machinery
-    *     buys nothing (every partition would be read) — fall back to
-    *     EXACT brute force over the filtered subset, the cheaper plan:
-    *     the predicate pushes into the partitioned parquet scan and the
-    *     q-bounded query side broadcasts into it (v18's shape). Exact
-    *     results for the hardest filters is the property the oracle
-    *     gates: below the crossover the engine serves exactly what
-    *     full-probe filtered search would.
+    *     buys nothing, and it needs no branch of its own: a search at
+    *     nEff = C probes every list, so it scans every filtered row with
+    *     the exact array-order dot, self skipped and the predicate pushed
+    *     into the partitioned parquet scan. That IS exact brute force
+    *     over the filtered subset, the answer the oracle gates for the
+    *     hardest filters.
     *
-    * Both branches pre-filter (k stays guaranteed over the filtered
-    * universe) and end in the bounded-heap rerank. */
+    * Both regimes pre-filter (k stays guaranteed over the filtered
+    * universe) and end in the same per-query top-k. */
   def adaptiveFilteredSearch(
       s: SparkSession, d: String, maxQueryId: Int, k: Int, baseProbe: Int,
       pred: Column): DataFrame = {
-    import s.implicits._
-    val idx = loadIndex(s, d)
+    val idx = resolve(s, Session(d)).index
     val c = centroidCount(s) // session knob, not the constant (ADVICE r10)
-    val total = idx.count()
-    val surv = idx.filter(pred).count()
-    val nEff = adaptiveProbes(baseProbe, total, surv, c)
-    if (nEff >= c) {
-      val q = emb(s, d)
-        .filter($"vec_id" < maxQueryId)
-        .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-      val scored = idx.filter(pred)
-        .select($"doc_id", $"embedding")
-        .crossJoin(broadcast(q))
-        .filter($"doc_id" =!= $"query_id")
-        .select($"query_id", $"doc_id", Functions.vecDot($"qe", $"embedding").as("score"))
-      BruteForce.rerank(scored, k)
-    } else search(s, d, maxQueryId, k, nEff, Some(pred))
+    val nEff = adaptiveProbes(baseProbe, idx.count(), idx.filter(pred).count(), c)
+    search(s, Session(d), VectorSearch.queryVectors(s, d, maxQueryId), k, nEff, Some(pred))
   }
 
   /** Registry surface for the adaptive rule, BOTH regimes under one
@@ -3169,7 +3144,7 @@ object Ann extends QModule {
     "v44_quantizer_drift",
     (s, d) => {
       import s.implicits._
-      val idx = s.read.schema(IndexSchema).parquet(buildIncrementalIndex(s, d))
+      val idx = resolve(s, Latest(buildIncrementalIndex(s, d))).index
         .select($"doc_id", $"centroid_id")
       quantizerDriftFrame(idx, col("doc_id") % IncrMod =!= IncrRem)
     },
@@ -3336,18 +3311,6 @@ object Ann extends QModule {
     merged
   }
 
-  /** Search over the merged sharded artifact: probes the persisted
-    * frozen quantizer against the merged partitions — the same
-    * probe/score/rerank core as every other index surface. */
-  def searchSharded(
-      s: SparkSession, d: String, maxQueryId: Int, k: Int, nProbe: Int): DataFrame = {
-    val path = buildShardedIndex(s, d)
-    val idx = s.read.schema(IndexSchema).parquet(path)
-      .withColumn("centroid_id", col("centroid_id").cast("long"))
-    BruteForce.rerank(scoredOn(s, VectorSearch.queryVectors(s, d, maxQueryId),
-      centroidsAt(s, path), idx, nProbe, None).drop("prn"), k)
-  }
-
   // ------------------------------------------------ snapshots / time travel
 
   /** SNAPSHOT the index artifact: record the current set of data files
@@ -3367,7 +3330,7 @@ object Ann extends QModule {
     // `_graph` is append-only exactly like the data files, so without
     // manifest coverage a graph-REFINED search-as-of would silently use
     // today's edges with yesterday's files. Readers split the list by
-    // path prefix ([[loadIndexAt]] takes the data lines,
+    // path prefix (a [[Version]] ref takes the data lines,
     // [[graphFilesAt]] the sidecar lines).
     val globs = Seq("centroid_id=*/part-*", "_graph/part-*", "_graph_serve/part-*")
     val files = globs.flatMap { g =>
@@ -3461,15 +3424,6 @@ object Ann extends QModule {
       .sorted.toSeq
   }
 
-  /** The index AS OF snapshot `version`: reads exactly the manifest's
-    * DATA files (graph-sidecar lines are [[graphFilesAt]]'s);
-    * `basePath` keeps the `centroid_id=` partition column (and with it
-    * partition pruning) intact. */
-  def loadIndexAt(s: SparkSession, path: String, version: Int): DataFrame =
-    s.read.option("basePath", path).schema(IndexSchema)
-      .parquet(manifestFiles(s, path, version).filter(_.contains("/centroid_id=")): _*)
-      .withColumn("centroid_id", col("centroid_id").cast("long"))
-
   /** Snapshot `version`'s graph-sidecar files (candidate-edge tail +
     * compacted serve form; empty when the artifact had no graph at
     * snapshot time). */
@@ -3496,35 +3450,6 @@ object Ann extends QModule {
       .select($"src".as("query_id"), $"dst".as("doc_id"), $"score")
     BruteForce.rerank(edges, GraphDegree)
       .select($"query_id".as("src"), $"rnk", $"doc_id".as("dst"))
-  }
-
-  /** Graph-refined search AS OF snapshot `version`
-    * ([[graphRefinedSearchAt]] with every input pinned to the
-    * manifest): seeds, one-hop expansion, and exact rescore all read
-    * the version's file set — the as-of answer is blind to BOTH
-    * post-snapshot data files and post-snapshot edge appends
-    * (AnnGraphSpec pins the latter). Tombstones are ignored like every
-    * as-of read (v38: snapshots pin file sets; the live-view mask is a
-    * searchLive concern). */
-  def graphRefinedSearchAsOf(
-      s: SparkSession, q: DataFrame, path: String, version: Int,
-      k: Int, nProbe: Int, seedK: Int, excludeSelf: Boolean = true): DataFrame = {
-    import s.implicits._
-    val idx = loadIndexAt(s, path, version)
-    val seeds = BruteForce.rerank(
-      scoredOn(s, queryArray(q), centroidsAt(s, path), idx, nProbe, None).drop("prn"), seedK)
-      .select($"query_id", $"doc_id")
-    val expanded = seeds.as("s")
-      .join(graphAtVersion(s, path, version).as("g"), col("s.doc_id") === col("g.src"))
-      .select(col("s.query_id").as("query_id"), col("g.dst").as("doc_id"))
-    val cand0 = seeds.union(expanded).distinct()
-    val cand = if (excludeSelf) cand0.filter($"query_id" =!= $"doc_id") else cand0
-    val scored = idx
-      .select($"doc_id", $"embedding".as("de"))
-      .join(broadcast(cand), Seq("doc_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select($"query_id", $"doc_id", Functions.vecDot($"qe", $"de").as("score"))
-    BruteForce.rerank(scored, k)
   }
 
   /** Snapshot `version`'s recorded file list. */
@@ -3768,13 +3693,6 @@ object Ann extends QModule {
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
     finally in.close()
   }
-
-  /** Tombstone-masked search through the alias — what a reader runs:
-    * resolve, then [[searchLiveAt]] against whatever artifact the alias
-    * currently serves. */
-  def searchAlias(s: SparkSession, d: String, aliasDir: String,
-      maxQueryId: Int, k: Int, nProbe: Int): DataFrame =
-    searchLiveAt(s, d, resolveAlias(s, aliasDir), maxQueryId, k, nProbe)
 
   /** Expire all but the newest `keepLast` snapshot manifests — the
     * retention pass that bounds time-travel metadata (production table
@@ -4092,13 +4010,6 @@ object Ann extends QModule {
     path
   }
 
-  /** Search the snapshotted artifact AS OF `version` — same
-    * probe/score/rerank core, over exactly the manifest's files. */
-  def searchAt(
-      s: SparkSession, d: String, version: Int,
-      maxQueryId: Int, k: Int, nProbe: Int): DataFrame =
-    searchAtPath(s, d, buildSnapshottedIndex(s, d), version, maxQueryId, k, nProbe)
-
   // ---------------------------------------------------------------- v38
   /** Time-travel gate: search AS OF v1 must see ONLY the base corpus
     * (the delta is invisible even though its files sit in the same
@@ -4110,11 +4021,11 @@ object Ann extends QModule {
     "v38_time_travel",
     (s, d) => {
       import s.implicits._
-      val v1 = searchAt(s, d, 1, maxQueryId = 20, k = 10, nProbe = 4)
-        .select(lit(1).as("snap"), $"query_id", $"rnk", $"doc_id")
-      val v2 = searchAt(s, d, 2, maxQueryId = 20, k = 10, nProbe = 4)
-        .select(lit(2).as("snap"), $"query_id", $"rnk", $"doc_id")
-      v1.unionByName(v2).orderBy($"snap", $"query_id", $"rnk")
+      val path = buildSnapshottedIndex(s, d)
+      val q = VectorSearch.queryVectors(s, d, 20)
+      def asOf(v: Int) = search(s, Version(path, v), q, k = 10, nProbe = 4)
+        .select(lit(v).as("snap"), $"query_id", $"rnk", $"doc_id")
+      asOf(1).unionByName(asOf(2)).orderBy($"snap", $"query_id", $"rnk")
     },
     Some(s"""WITH ${duckCentAssignBase(s"vec_id % $IncrMod <> $IncrRem")}
       SELECT 1 AS snap, query_id, rnk, doc_id
@@ -4214,7 +4125,7 @@ object Ann extends QModule {
     * through the alias pointed at the base-only artifact, the cutover
     * is one [[setAlias]] call, phase 2 serves the reindexed (base +
     * delta) artifact through the SAME alias — readers never address an
-    * artifact path directly. [[searchAlias]] resolves the pointer at
+    * artifact path directly. An [[Alias]] ref resolves the pointer at
     * DataFrame-construction time, so phase 1's plan stays pinned to
     * blue even though it may execute after the swap. The oracle is the
     * v38 shape: both phases replay the frozen base-trained quantizer,
@@ -4230,12 +4141,14 @@ object Ann extends QModule {
       // bound — production aliases keep their trail, fixtures don't
       val (fs0, ad) = hfs(s, aliasDir)
       fs0.delete(ad, true)
+      val q = VectorSearch.queryVectors(s, d, 20)
+      def served(phase: Int) =
+        search(s, Alias(aliasDir), q, k = 10, nProbe = 4, maskTombstones = true)
+          .select(lit(phase).as("phase"), $"query_id", $"rnk", $"doc_id")
       setAlias(s, aliasDir, blue)
-      val p1 = searchAlias(s, d, aliasDir, maxQueryId = 20, k = 10, nProbe = 4)
-        .select(lit(1).as("phase"), $"query_id", $"rnk", $"doc_id")
+      val p1 = served(1)
       setAlias(s, aliasDir, green) // the cutover — one atomic pointer write
-      val p2 = searchAlias(s, d, aliasDir, maxQueryId = 20, k = 10, nProbe = 4)
-        .select(lit(2).as("phase"), $"query_id", $"rnk", $"doc_id")
+      val p2 = served(2)
       p1.unionByName(p2).orderBy($"phase", $"query_id", $"rnk")
     },
     Some(s"""WITH ${duckCentAssignBase(s"vec_id % $IncrMod <> $IncrRem")}
@@ -4280,7 +4193,8 @@ object Ann extends QModule {
     "v58_upsert_search",
     (s, d) => {
       val path = upsertScenario(s, d)
-      searchLiveAt(s, d, path, maxQueryId = 20, k = 10, nProbe = 4)
+      search(s, Latest(path), VectorSearch.queryVectors(s, d, 20), k = 10, nProbe = 4,
+          maskTombstones = true)
         .select(col("query_id"), col("rnk"), col("doc_id"))
     },
     Some(s"""WITH corpus2 AS (
@@ -4362,21 +4276,15 @@ object Ann extends QModule {
     (s, d) => {
       import s.implicits._
       val merged = buildShardedIndex(s, d) // ensures shard build ran
-      val root = shardRoot(s, d)
-      val cents = centroidsAt(s, merged)
       val q = VectorSearch.queryVectors(s, d, 20)
       // NOTE: v37's merge DRAINED the shard dirs (faiss merge_into
       // semantics), so the per-shard scan here reads the merged artifact
       // restricted to each shard's rows — the same bytes the un-merged
       // shard held, scanned per-shard to exercise the scatter path.
       val perShard = (0 until 2).map { r =>
-        val idx = s.read.schema(IndexSchema).parquet(merged)
-          .withColumn("centroid_id", col("centroid_id").cast("long"))
-          .filter($"doc_id" % 2 === r)
-        BruteForce.rerank(scoredOn(s, q, cents, idx, 4, None).drop("prn"), 10)
-          .drop("rnk")
+        search(s, Latest(merged), q, k = 10, nProbe = 4, Some($"doc_id" % 2 === r)).drop("rnk")
       }
-      BruteForce.rerank(perShard.reduce(_ unionByName _), 10)
+      graft.plans.PerQueryTopK.exact(perShard.reduce(_ unionByName _), 10)
         .select($"query_id", $"rnk", $"doc_id")
     },
     Some(s"""WITH $duckCentAssign
@@ -4390,7 +4298,8 @@ object Ann extends QModule {
     * mismatch, not a silent recall dip. */
   private val v37 = Q(
     "v37_shard_merge",
-    (s, d) => searchSharded(s, d, maxQueryId = 20, k = 10, nProbe = 4)
+    (s, d) => search(s, Latest(buildShardedIndex(s, d)), VectorSearch.queryVectors(s, d, 20),
+        k = 10, nProbe = 4)
       .select(col("query_id"), col("rnk"), col("doc_id")),
     Some(s"""WITH $duckCentAssign
       SELECT query_id, rnk, doc_id FROM (${duckSearch(20, 10, 4)}) ORDER BY query_id, rnk"""))

@@ -136,7 +136,8 @@ object Autotune extends QModule {
         t -> pool.submit(new java.util.concurrent.Callable[Seq[DataFrame]] {
           def call(): Seq[DataFrame] = byTier(t).map { case (tier, dial) =>
             val f = tier match {
-              case "ivf" => Ann.search(s, d, MaxQ, K, dial)
+              case "ivf" =>
+                Ann.search(s, Ann.Session(d), VectorSearch.queryVectors(s, d, MaxQ), K, dial)
               case "ivfsq" => Sq.searchIvf(s, d, MaxQ, K, dial)
               case "pq" => Pq.search(s, d, MaxQ, K, dial)
               case "bin" => Compact.searchBinary(s, d, MaxQ, K, dial)
@@ -288,7 +289,8 @@ object Autotune extends QModule {
         .select($"query_id", $"doc_id", lit(1).as("in_exact"))
       val frames = SampleCells.map { case (tier, dial) =>
         val f = tier match {
-          case "ivf" => Ann.search(s, d, SampleMaxQ, K, dial)
+          case "ivf" =>
+            Ann.search(s, Ann.Session(d), VectorSearch.queryVectors(s, d, SampleMaxQ), K, dial)
           case "ivfsq" => Sq.searchIvf(s, d, SampleMaxQ, K, dial)
           case "pq" => Pq.search(s, d, SampleMaxQ, K, dial)
         }

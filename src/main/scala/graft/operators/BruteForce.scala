@@ -88,28 +88,11 @@ object BruteForce {
   /** Global re-rank of a candidate frame (query_id, doc_id, score) via the
     * [[graft.functions.TopKAgg]] bounded-heap aggregate — map-side partial
     * top-k, no per-query window sort (SURVEY §4.3.1). */
-  def rerank(candidates: DataFrame, k: Int): DataFrame =
-    rerankWith(candidates, k, distinct = false)
-
-  /** [[rerank]] with per-doc dedup (best score wins) — the variant for
-    * candidate frames built by doc_id JOINS against the live scan, which
-    * a crash-window reader's debris-union can legitimately hand the same
-    * doc twice with identical vectors (Ann.indexFrame's fallback at a
-    * mid-split crash state): the doc must occupy ONE rank, not two. The
-    * probe-pruned paths keep the plain variant — their candidate sets
-    * are unique by construction, and the SQL-surfaced collect_top_k's
-    * duplicate semantics are oracle-pinned. */
-  def rerankDistinct(candidates: DataFrame, k: Int): DataFrame =
-    rerankWith(candidates, k, distinct = true)
-
-  private def rerankWith(candidates: DataFrame, k: Int, distinct: Boolean): DataFrame = {
+  def rerank(candidates: DataFrame, k: Int): DataFrame = {
     import candidates.sparkSession.implicits._
-    val agg =
-      if (distinct) graft.functions.TopKAgg.collectTopKDistinct($"score", $"doc_id", k)
-      else graft.functions.TopKAgg.collectTopK($"score", $"doc_id", k)
     candidates
       .groupBy($"query_id")
-      .agg(agg.as("topk"))
+      .agg(graft.functions.TopKAgg.collectTopK($"score", $"doc_id", k).as("topk"))
       .select($"query_id", posexplode($"topk").as(Seq("pos", "hit")))
       .select(
         $"query_id",

@@ -39,7 +39,7 @@ object VectorSearch extends QModule {
   /** The registry's query set, driver-held: (vec_id, embedding) for
     * vec_id < maxQueryId, sorted by id. One collect per call — every
     * search tier probes or scores these arrays. */
-  private[operators] def queryVectors(
+  private[graft] def queryVectors(
       s: SparkSession, d: String, maxQueryId: Int): Array[(Long, Array[Float])] = {
     import s.implicits._
     emb(s, d).filter($"vec_id" < maxQueryId).select($"vec_id", $"embedding")
@@ -837,7 +837,7 @@ object VectorSearch extends QModule {
   private[operators] def graphRefined(
       s: SparkSession, d: String, maxQ: Int, k: Int, nProbe: Int): DataFrame = {
     import s.implicits._
-    val seeds = Ann.search(s, d, maxQueryId = maxQ, k = k, nProbe = nProbe)
+    val seeds = Ann.search(s, Ann.Session(d), queryVectors(s, d, maxQ), k = k, nProbe = nProbe)
       .select($"query_id", $"doc_id")
     val expanded = seeds.as("s")
       .join(knnGraph(s, d).as("g"), col("s.doc_id") === col("g.src"))
@@ -908,31 +908,27 @@ object VectorSearch extends QModule {
     * artifact's own partitioning (same probe width, degree, and tie
     * orders as the memoized [[knnGraph]] — probe 2, degree 3 — so the
     * persisted adjacency IS the in-session one), then
-    * [[Ann.graphRefinedSearchAt]] serves v33's exact parameters from
+    * [[Ann.graphRefinedSearch]] serves v33's exact parameters from
     * disk alone. Same oracle as v33, because persisted serving must be
     * row-identical to the in-session pipeline. Tombstones unmasked:
     * this is the v09-style plain view (v21's persistent tombstones are
-    * a searchLive concern). */
+    * masked only where a search asks for it). */
   /** The v45 plan as a reusable surface (also the `graph_search` SQL
     * TVF's expansion): ensure the `_centroids` + `_graph` sidecars on
     * the registry artifact (build-if-absent), then serve
-    * [[Ann.graphRefinedSearchAt]] from disk alone.
-    * @return (query_id, doc_id, score, rnk) — unordered, like
-    *         [[Ann.search]] */
+    * [[Ann.graphRefinedSearch]] from disk alone.
+    * @return (query_id, doc_id, score, rnk), like [[Ann.search]] */
   def graphSidecarSearch(
       s: SparkSession, d: String, maxQueryId: Int, k: Int, nProbe: Int,
       seedK: Int, pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    import s.implicits._
     val path = Ann.ensureCentroidSidecar(s, d)
     graft.PathLocks.withLock(s"$path/_graph") { // Ann.buildIndex race note
       val gdone = new org.apache.hadoop.fs.Path(s"$path/_graph/_SUCCESS")
       val fs = gdone.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(gdone)) Ann.buildGraphAt(s, path)
     }
-    val q = emb(s, d).filter($"vec_id" < maxQueryId)
-      .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-    Ann.graphRefinedSearchAt(s, q, path, k = k, nProbe = nProbe,
-      seedK = seedK, maskTombstones = false, pred = pred)
+    Ann.graphRefinedSearch(s, Ann.Latest(path), queryVectors(s, d, maxQueryId), k = k,
+      nProbe = nProbe, seedK = seedK, pred = pred)
   }
 
   private val v45 = Q(
@@ -967,7 +963,7 @@ object VectorSearch extends QModule {
     * with the graph tier (the v18/v19/v42 filtered-search family
     * extended to the serving surface it was missing; every production
     * vector database needs filters on its graph tier too). Both stages
-    * pre-filter ([[Ann.graphRefinedSearchAt]]'s `pred` doc): seeds from
+    * pre-filter ([[Ann.graphRefinedSearch]]'s `pred` doc): seeds from
     * the filtered universe through the pruned probe scan at a widened
     * dial (nProbe [[FilteredGraphNProbe]] — the v19 discipline: a
     * selective predicate thins each probed list), one-hop expansion

@@ -26,6 +26,13 @@ import graft.functions.TopKAgg
   * `(query_id, doc_id, score DOUBLE, rnk BIGINT)`. An exact tier passes
   * approx = score and rcand = k, which makes it the plain top-k by score.
   *
+  * One rank per doc: a doc offered twice for one query keeps its best
+  * approx and that candidate's exact score (the first offer wins a tie).
+  * The served tiers produce candidates unique per (query, doc), so this
+  * changes none of their rows; it keeps a doc at one rank where a
+  * crash-window reader's debris union, or a rescore join against it,
+  * hands the same doc twice.
+  *
   * A partition's top-`rcand` holds every global top-`rcand` member it
   * contains, so the answer does not depend on partitioning. The merge
   * needs no shuffle: `collect()` runs the child and the partition-local
@@ -174,10 +181,10 @@ case class PerQueryTopKExec(
 
 object PerQueryTopKExec {
 
-  /** One query's candidate pool: the top-`rcand` by (approx desc, doc_id
-    * asc), each member's exact score beside it. */
+  /** One query's candidate pool: the top-`rcand` distinct docs by
+    * (approx desc, doc_id asc), each member's exact score beside it. */
   private final class Pool(rcand: Int) {
-    val byApprox = new TopKAgg.Heap(rcand)
+    val byApprox = new TopKAgg.Heap(rcand, dedupIds = true)
     val exact = new scala.collection.mutable.LongMap[Double]
     def offer(approx: Double, docId: Long, score: Double): Unit =
       if (byApprox.offer(approx, docId)) exact(docId) = score

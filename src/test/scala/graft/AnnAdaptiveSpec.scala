@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Ann
+import graft.operators.{Ann, VectorSearch}
 
 /** Selectivity-adaptive filtered ANN (VERDICT r9 next #3): recall
   * against exact filtered search must hold ACROSS selectivities — the
@@ -19,8 +19,12 @@ class AnnAdaptiveSpec extends SparkSpec {
   /** Ground truth: full-probe filtered search IS exact over the
     * filtered universe (every partition probed, predicate pre-filtered,
     * exact rescore). */
-  private def exactFiltered(pred: Column): DataFrame =
-    Ann.search(spark, sf0001, MaxQ, K, Ann.Centroids, Some(pred))
+  private def exactFiltered(pred: Column): DataFrame = search(Ann.Centroids, Some(pred))
+
+  /** The plain probed search of the registry artifact, queries vec_id < MaxQ. */
+  private def search(nProbe: Int, pred: Option[Column]): DataFrame =
+    Ann.search(spark, Ann.Session(sf0001), VectorSearch.queryVectors(spark, sf0001, MaxQ), K,
+      nProbe, pred)
 
   private def sets(df: DataFrame): Map[Long, Set[Long]] =
     df.select($"query_id", $"doc_id").as[(Long, Long)].collect()
@@ -45,7 +49,7 @@ class AnnAdaptiveSpec extends SparkSpec {
     // it, see the bench sweep) must SURVIVE any predicate. A fixed dial
     // loses it as selectivity rises; the widened/crossover dial holds it.
     val target = overlap(
-      Ann.search(spark, sf0001, MaxQ, K, nProbe = 4, None),
+      search(nProbe = 4, None),
       exactFiltered(lit(1) === 1))
     info(f"unfiltered operating point at base dial: overlap@10 = $target%.4f")
     // selectivity ~1.0, ~0.4, ~0.1, ~0.027 — from no-op to the
@@ -68,7 +72,7 @@ class AnnAdaptiveSpec extends SparkSpec {
   test("fixed dial starves at high selectivity; the adaptive dial does not") {
     val pred = col("doc_id") % 37 === 0
     val exact = exactFiltered(pred)
-    val fixed = overlap(Ann.search(spark, sf0001, MaxQ, K, nProbe = 4, Some(pred)), exact)
+    val fixed = overlap(search(nProbe = 4, Some(pred)), exact)
     val adaptive = overlap(
       Ann.adaptiveFilteredSearch(spark, sf0001, MaxQ, K, baseProbe = 4, pred), exact)
     info(f"selective predicate: fixed nProbe=4 overlap $fixed%.4f vs adaptive $adaptive%.4f")

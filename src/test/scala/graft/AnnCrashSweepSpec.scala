@@ -69,7 +69,7 @@ class AnnCrashSweepSpec extends SparkSpec {
 
   /** Probe-path serve snapshot (doc_id -> score for one fixed query)
     * through the REAL serving plan — quantizer probe → scored candidates
-    * → tombstone mask → rerank (the searchLiveAt/searchArtifact core) —
+    * → tombstone mask → top-k (`Ann.search` over a `Latest` ref) —
     * with every list probed and k over the corpus size, so the map IS
     * the served universe plus the exact vector each doc is served with
     * (the fixtures flip vectors on update, so score changes pin version
@@ -84,20 +84,22 @@ class AnnCrashSweepSpec extends SparkSpec {
     rows.toMap
   }
 
+  /** The one probe query, driver-held, so a serve snapshot runs no
+    * query-vector collect. */
+  private val probeQuery = Array((9000000L, Array.fill(dim)((1.0 / math.sqrt(dim)).toFloat)))
+
   private def serveState(path: String): Map[Long, Double] = {
     import s2.implicits._
-    val qv = Array.fill(dim)((1.0 / math.sqrt(dim)).toFloat)
-    val q = Seq((9000000L, qv)).toDF("query_id", "qe")
-    servedMap(Ann.searchArtifact(s2, q, path, k = 4000, nProbe = 64)
+    servedMap(Ann.search(s2, Ann.Latest(path), probeQuery, k = 4000, nProbe = 64,
+        maskTombstones = true)
       .select($"doc_id", $"score").as[(Long, Double)].collect(), s"serve($path)")
   }
 
   /** Same snapshot through the graph-refined serving path. */
   private def graphServeState(path: String): Map[Long, Double] = {
     import s2.implicits._
-    val qv = Array.fill(dim)((1.0 / math.sqrt(dim)).toFloat)
-    val q = Seq((9000000L, qv)).toDF("query_id", "qe")
-    servedMap(Ann.graphRefinedSearchAt(s2, q, path, k = 4000, nProbe = 64, seedK = 4000)
+    servedMap(Ann.graphRefinedSearch(s2, Ann.Latest(path), probeQuery, k = 4000, nProbe = 64,
+        seedK = 4000, maskTombstones = true)
       .select($"doc_id", $"score").as[(Long, Double)].collect(), s"graphServe($path)")
   }
 
@@ -391,7 +393,7 @@ class AnnCrashSweepSpec extends SparkSpec {
           // not of the heal — so the dup pin applies to whatever
           // newest manifest exists)
           Ann.snapshotVersions(s2, root).lastOption.foreach { latest =>
-            assert(dupDocs(Ann.loadIndexAt(s2, root, latest)).isEmpty,
+            assert(dupDocs(Ann.resolve(s2, Ann.Version(root, latest)).index).isEmpty,
               s"crash@$k: newest snapshot pins a doc twice (re-manifested before the roll)")
           }
           assertFsckGreen(root, s"graph-verb heal crash@$k")
@@ -436,7 +438,7 @@ class AnnCrashSweepSpec extends SparkSpec {
       // debris-union hands it the same doc twice (retired source +
       // minted list), the exact duplicate-serve the r14 review found;
       // running it at every fault point of the SPLIT pins the
-      // rerankDistinct fix (serveState fails loudly on duplicate ranks)
+      // one-rank-per-doc top-k (serveState fails loudly on duplicate ranks)
       Ann.buildGraphAt(s2, root)
       root
     }

@@ -144,8 +144,8 @@ class AnnDriftRepairSpec extends SparkSpec {
     assert(corpus.length == 2026 && corpus.map(_._1).distinct.length == 2026)
     val qvs = Seq(
       (90000L, near(0, 12, 0.3f)), (90001L, near(1, 9, 0.2f)), (90002L, near(4, 8, 0.3f)))
-    val q = qvs.toDF("query_id", "qe")
-    val got = Ann.searchArtifact(spark, q, path, k = 5, nProbe = 5)
+    val got = Ann.search(spark, Ann.Latest(path), qvs.toArray, k = 5, nProbe = 5,
+        maskTombstones = true)
       .select(col("query_id"), col("rnk"), col("doc_id"))
       .as[(Long, Long, Long)].collect()
       .groupBy(_._1).map { case (qid, rows) => qid -> rows.sortBy(_._2).map(_._3).toSeq }
@@ -201,8 +201,8 @@ class AnnDriftRepairSpec extends SparkSpec {
     // probe reachability: the arrived distribution has its own
     // centroid(s) — an nProbe=1 search for a hot-cluster query resolves
     // to hot-cluster members without probing anything else
-    val q = Seq((90000L, near(0, 5, 0.35f))).toDF("query_id", "qe")
-    val top = Ann.searchArtifact(spark, q, path, k = 3, nProbe = 1)
+    val q = Array((90000L, near(0, 5, 0.35f)))
+    val top = Ann.search(spark, Ann.Latest(path), q, k = 3, nProbe = 1, maskTombstones = true)
       .select(col("doc_id")).as[Long].collect()
     assert(top.nonEmpty && top.forall(_ >= 10000L),
       s"nProbe=1 hot-cluster search returned non-hot docs: ${top.toSeq}")
@@ -212,7 +212,8 @@ class AnnDriftRepairSpec extends SparkSpec {
     // live state (numbering monotone past the expired version)
     val versions = Ann.snapshotVersions(spark, path)
     assert(versions == Seq(2), s"expected v1 expired + v2 re-manifested, got $versions")
-    val asOf = Ann.loadIndexAt(spark, path, 2).select(col("doc_id")).as[Long].collect()
+    val asOf = Ann.resolve(spark, Ann.Version(path, 2)).index
+      .select(col("doc_id")).as[Long].collect()
     assert(asOf.sorted.toSeq == docs.sorted.toSeq, "as-of latest != live file set")
   }
 
@@ -259,8 +260,8 @@ class AnnDriftRepairSpec extends SparkSpec {
       .select(col("doc_id"), col("embedding"))
       .as[(Long, Array[Float])].collect().toSeq
     val qvs = Seq((90000L, near(0, 5, 0.35f)), (90001L, near(2, 9, 0.2f)))
-    val got = Ann.searchArtifact(spark, qvs.toDF("query_id", "qe"), path,
-        k = 5, nProbe = cids.length)
+    val got = Ann.search(spark, Ann.Latest(path), qvs.toArray, k = 5, nProbe = cids.length,
+        maskTombstones = true)
       .select(col("query_id"), col("rnk"), col("doc_id"))
       .as[(Long, Long, Long)].collect()
       .groupBy(_._1).map { case (qid, rows) => qid -> rows.sortBy(_._2).map(_._3).toSeq }
@@ -285,7 +286,8 @@ class AnnDriftRepairSpec extends SparkSpec {
     val versions = Ann.snapshotVersions(spark, path)
     assert(versions == Seq(2), s"expected v1 expired + v2 re-manifested, got $versions")
     val live = spark.read.parquet(path).select(col("doc_id")).as[Long].collect().sorted.toSeq
-    val asOf = Ann.loadIndexAt(spark, path, 2).select(col("doc_id")).as[Long].collect().sorted.toSeq
+    val asOf = Ann.resolve(spark, Ann.Version(path, 2)).index
+      .select(col("doc_id")).as[Long].collect().sorted.toSeq
     assert(asOf == live)
   }
 }

@@ -73,7 +73,6 @@ class AnnGraphSpec extends SparkSpec {
   // 62.5c + 31.25 - 0.3, probing arc c, with true neighbors across
   private lazy val queries: Array[(Long, Array[Float])] =
     Array.tabulate(nCent)(c => (c.toLong, mvec(c * n.toDouble / nCent + n.toDouble / (2 * nCent) - 0.3)))
-  private lazy val qDf = queries.toSeq.toDF("query_id", "qe")
 
   private lazy val exact10: Map[Long, Seq[Long]] = queries.map { case (qid, qv) =>
     val scored = (0L until n.toLong).map { id =>
@@ -91,9 +90,11 @@ class AnnGraphSpec extends SparkSpec {
       .groupBy(_._1).map { case (q, rows) => q -> rows.map(_._2).toSet }
 
   test("added vectors are reachable via graph refinement with NO bulk rebuild") {
-    val plain = resultsOf(Ann.searchArtifact(spark, qDf, path, k = 10, nProbe = 1))
+    val plain = resultsOf(Ann.search(spark, Ann.Latest(path), queries, k = 10, nProbe = 1,
+        maskTombstones = true))
     val refined = resultsOf(
-      Ann.graphRefinedSearchAt(spark, qDf, path, k = 10, nProbe = 1, seedK = 10))
+      Ann.graphRefinedSearch(spark, Ann.Latest(path), queries, k = 10, nProbe = 1, seedK = 10,
+        maskTombstones = true))
     // witnesses: a DELTA doc in the query's exact top-10 that plain
     // nProbe=1 misses (it lives across the arc boundary) and graph
     // refinement recovers — reachable only through edges appended by
@@ -148,9 +149,11 @@ class AnnGraphSpec extends SparkSpec {
     val missing = delta.map(_._1).filterNot(srcs.contains)
     assert(missing.isEmpty, s"streamed vectors with no out-edges: ${missing.take(5)}")
     // and across-boundary rescues still happen through the streamed graph
-    val plain = resultsOf(Ann.searchArtifact(spark, qDf, sPath, k = 10, nProbe = 1))
+    val plain = resultsOf(Ann.search(spark, Ann.Latest(sPath), queries, k = 10, nProbe = 1,
+        maskTombstones = true))
     val refined = resultsOf(
-      Ann.graphRefinedSearchAt(spark, qDf, sPath, k = 10, nProbe = 1, seedK = 10))
+      Ann.graphRefinedSearch(spark, Ann.Latest(sPath), queries, k = 10, nProbe = 1, seedK = 10,
+        maskTombstones = true))
     val witnesses = queries.flatMap { case (qid, _) =>
       exact10(qid).filter(isDelta)
         .filter(v => !plain.getOrElse(qid, Set.empty).contains(v))
@@ -205,8 +208,8 @@ class AnnGraphSpec extends SparkSpec {
     val v1 = Ann.snapshotIndex(spark, sPath)
     assert(Ann.graphFilesAt(spark, sPath, v1).nonEmpty,
       "snapshot manifest carries no graph sidecar files")
-    val liveBefore = Ann.graphRefinedSearchAt(
-        spark, qDf, sPath, k = 10, nProbe = 1, seedK = 10, maskTombstones = false)
+    val liveBefore = Ann.graphRefinedSearch(
+        spark, Ann.Latest(sPath), queries, k = 10, nProbe = 1, seedK = 10)
       .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
     val delta = spark.range(n.toLong).filter(id => isDelta(id))
       .map(id => (id, mvec(id.toDouble), 0))
@@ -218,16 +221,18 @@ class AnnGraphSpec extends SparkSpec {
       .subsetOf(Ann.graphFilesAt(spark, sPath, v2).toSet))
     // AS OF v1: pre-delta files AND pre-delta edges — row-identical to
     // the live read taken before the append, and blind to every delta id
-    val asOf1 = Ann.graphRefinedSearchAsOf(spark, qDf, sPath, v1, k = 10, nProbe = 1, seedK = 10)
+    val asOf1 = Ann.graphRefinedSearch(spark, Ann.Version(sPath, v1), queries, k = 10, nProbe = 1,
+        seedK = 10)
       .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
     assert(asOf1 == liveBefore,
       "search-as-of v1 differs from the pre-append live read (manifest leak)")
     assert(!asOf1.exists { case (_, _, doc) => isDelta(doc) })
     // AS OF v2 equals the live post-append read
-    val asOf2 = Ann.graphRefinedSearchAsOf(spark, qDf, sPath, v2, k = 10, nProbe = 1, seedK = 10)
+    val asOf2 = Ann.graphRefinedSearch(spark, Ann.Version(sPath, v2), queries, k = 10, nProbe = 1,
+        seedK = 10)
       .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
-    val liveAfter = Ann.graphRefinedSearchAt(
-        spark, qDf, sPath, k = 10, nProbe = 1, seedK = 10, maskTombstones = false)
+    val liveAfter = Ann.graphRefinedSearch(
+        spark, Ann.Latest(sPath), queries, k = 10, nProbe = 1, seedK = 10)
       .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
     assert(asOf2 == liveAfter)
   }
@@ -264,12 +269,13 @@ class AnnGraphSpec extends SparkSpec {
       Array((0L, uv(0)), (1L, uv(1))))
     Ann.buildGraphAt(spark, tPath)
     val ids = Seq(0L, 5L, 12L, 19L)
-    val q = ids.map(d => (d, dvec(d))).toDF("query_id", "qe")
+    val q = ids.map(d => (d, dvec(d))).toArray
     val dropped = resultsOf(
-      Ann.graphRefinedSearchAt(spark, q, tPath, k = 5, nProbe = 1, seedK = 5))
+      Ann.graphRefinedSearch(spark, Ann.Latest(tPath), q, k = 5, nProbe = 1, seedK = 5,
+        maskTombstones = true))
     val kept = resultsOf(
-      Ann.graphRefinedSearchAt(spark, q, tPath, k = 5, nProbe = 1, seedK = 5,
-        excludeSelf = false))
+      Ann.graphRefinedSearch(spark, Ann.Latest(tPath), q, k = 5, nProbe = 1, seedK = 5,
+        maskTombstones = true, excludeSelf = false))
     ids.foreach { d =>
       assert(!dropped(d).contains(d),
         s"corpus-member convention should drop the colliding doc $d")
@@ -294,10 +300,11 @@ class AnnGraphSpec extends SparkSpec {
     Ann.buildGraphAt(spark, fPath)
     val pred = org.apache.spark.sql.functions.col("label") =!= 2
     val plain = resultsOf(
-      Ann.searchArtifact(spark, qDf, fPath, k = 10, nProbe = 1, pred = Some(pred)))
+      Ann.search(spark, Ann.Latest(fPath), queries, k = 10, nProbe = 1, Some(pred),
+        maskTombstones = true))
     val refined = resultsOf(
-      Ann.graphRefinedSearchAt(spark, qDf, fPath, k = 10, nProbe = 1, seedK = 10,
-        pred = Some(pred)))
+      Ann.graphRefinedSearch(spark, Ann.Latest(fPath), queries, k = 10, nProbe = 1, seedK = 10,
+        maskTombstones = true, pred = Some(pred)))
     refined.values.flatten.foreach(d =>
       assert(d % 3 != 2, s"filtered graph search served excluded doc $d"))
     // filtered ground truth: exact top-10 over the label != 2 universe

@@ -23,6 +23,9 @@ class AnnLifecycleSpec extends SparkSpec {
     s
   }
 
+  /** The registry query set vec_id < n, driver-held. */
+  private def queries(n: Int) = VectorSearch.queryVectors(s2, sf0001, n)
+
   test("incremental index holds every doc exactly once; quantizer is persisted") {
     val path = Ann.buildIncrementalIndex(s2, sf0001)
     val idx = s2.read.parquet(path)
@@ -54,7 +57,8 @@ class AnnLifecycleSpec extends SparkSpec {
   test("full-probe incremental search reproduces the exact brute-force top-10") {
     val exact = VectorSearch.searchFrame(spark, sf0001)
       .filter($"rnk" <= 10).select($"query_id", $"doc_id")
-    val ann = Ann.searchIncremental(s2, sf0001, maxQueryId = 100, k = 10,
+    val ann = Ann.search(s2, Ann.Latest(Ann.buildIncrementalIndex(s2, sf0001)), queries(100),
+        k = 10,
         nProbe = Ann.Centroids)
       .select($"query_id", $"doc_id")
     assert(ann.join(exact, Seq("query_id", "doc_id")).count() == exact.count())
@@ -94,10 +98,11 @@ class AnnLifecycleSpec extends SparkSpec {
     } finally Memo.drop(s3)
   }
 
-  test("delete: tombstoned docs vanish from searchLive, k stays guaranteed") {
+  test("delete: tombstoned docs vanish from a masked search, k stays guaranteed") {
     Ann.buildIndex(s2, sf0001)
     Ann.deleteFromIndex(s2, sf0001, $"doc_id" % 17 === 3)
-    val rows = Ann.searchLive(s2, sf0001, maxQueryId = 20, k = 10, nProbe = 4)
+    val rows = Ann.search(s2, Ann.Session(sf0001), queries(20), k = 10, nProbe = 4,
+        maskTombstones = true)
       .select($"query_id", $"doc_id").as[(Long, Long)].collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_._2 % 17 != 3), "tombstoned doc served")
@@ -114,34 +119,36 @@ class AnnLifecycleSpec extends SparkSpec {
     val path = Ann.buildIndex(s2, sf0001)
     val affected = Ann.tombstones(s2, sf0001)
       .select($"centroid_id").distinct().as[Long].collect().toSet
-    val untouched = Ann.loadIndex(s2, sf0001)
+    val untouched = Ann.resolve(s2, Ann.Session(sf0001)).index
       .select($"centroid_id").distinct().as[Long].collect().toSet -- affected
     val untouchedListings = untouched.map { cid =>
       cid -> new java.io.File(s"$path/centroid_id=$cid").listFiles()
         .map(f => (f.getName, f.lastModified())).toSet
     }.toMap
 
-    val before = Ann.searchLive(s2, sf0001, maxQueryId = 20, k = 10, nProbe = 4)
+    val before = Ann.search(s2, Ann.Session(sf0001), queries(20), k = 10, nProbe = 4,
+        maskTombstones = true)
       .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
 
     Ann.compactIndex(s2, sf0001)
 
     // tombstone set cleared; deleted rows physically gone
     assert(Ann.tombstones(s2, sf0001).count() == 0)
-    assert(Ann.loadIndex(s2, sf0001).filter($"doc_id" % 17 === 3).count() == 0)
+    assert(Ann.resolve(s2, Ann.Session(sf0001)).index.filter($"doc_id" % 17 === 3).count() == 0)
     // untouched partitions: identical files, untouched mtimes
     untouchedListings.foreach { case (cid, files) =>
       val now = new java.io.File(s"$path/centroid_id=$cid").listFiles()
         .map(f => (f.getName, f.lastModified())).toSet
       assert(now == files, s"partition $cid was rewritten by compaction")
     }
-    // search equivalence: post-compaction searchLive (no tombstones) and
+    // search equivalence: post-compaction masked search (no tombstones) and
     // plain search both reproduce the pre-compaction masked result
-    val after = Ann.searchLive(s2, sf0001, maxQueryId = 20, k = 10, nProbe = 4)
+    val after = Ann.search(s2, Ann.Session(sf0001), queries(20), k = 10, nProbe = 4,
+        maskTombstones = true)
       .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
-    val plain = Ann.search(s2, sf0001, maxQueryId = 20, k = 10, nProbe = 4)
+    val plain = Ann.search(s2, Ann.Session(sf0001), queries(20), k = 10, nProbe = 4)
       .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
-    assert(after == before, "compaction changed searchLive results")
+    assert(after == before, "compaction changed the masked search results")
     assert(plain == before, "post-compaction plain search must equal the masked result")
   }
 
@@ -170,7 +177,8 @@ class AnnLifecycleSpec extends SparkSpec {
       val threshold = 3
       val fragmented = before.filter(_._2.size > threshold).keySet
       assert(fragmented.nonEmpty, "fixture failed to fragment any list")
-      val resBefore = Ann.searchLiveAt(s2, sf0001, root, maxQueryId = 20, k = 10, nProbe = 4)
+      val resBefore = Ann.search(s2, Ann.Latest(root), queries(20), k = 10, nProbe = 4,
+          maskTombstones = true)
         .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
 
       Ann.compactSmallFilesAt(s2, root, maxFilesPerList = threshold)
@@ -184,7 +192,8 @@ class AnnLifecycleSpec extends SparkSpec {
       (before.keySet -- fragmented).foreach { d =>
         assert(after(d) == before(d), s"untouched list $d was modified")
       }
-      val resAfter = Ann.searchLiveAt(s2, sf0001, root, maxQueryId = 20, k = 10, nProbe = 4)
+      val resAfter = Ann.search(s2, Ann.Latest(root), queries(20), k = 10, nProbe = 4,
+          maskTombstones = true)
         .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
       assert(resAfter == resBefore, "file compaction changed search results")
     } finally {
@@ -231,7 +240,7 @@ class AnnLifecycleSpec extends SparkSpec {
       val vs = Ann.snapshotVersions(s2, root)
       assert(!vs.contains(v0), "stale manifest pinning replaced files must be expired")
       assert(vs.nonEmpty, "recovery must re-snapshot after the roll-forward")
-      assert(Ann.loadIndexAt(s2, root, vs.last)
+      assert(Ann.resolve(s2, Ann.Version(root, vs.last)).index
         .select($"doc_id").as[Long].collect().toSet == clean,
         "search-as-of latest broken after recovery")
     } finally fs.delete(new org.apache.hadoop.fs.Path(root), true)
@@ -329,12 +338,13 @@ class AnnLifecycleSpec extends SparkSpec {
           .as[(Long, Array[Float], Int)])
       val alias = s"$base/serving"
       def served(): Set[(Long, Long, Long)] =
-        Ann.searchAlias(s2, sf0001, alias, maxQueryId = 20, k = 10, nProbe = 4)
+        Ann.search(s2, Ann.Alias(alias), queries(20), k = 10, nProbe = 4, maskTombstones = true)
           .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
 
       assert(Ann.setAlias(s2, alias, s"$base/blue") == 1)
       val blueRes = served()
-      val direct = Ann.searchLiveAt(s2, sf0001, s"$base/blue", 20, 10, 4)
+      val direct = Ann.search(s2, Ann.Latest(s"$base/blue"), queries(20), 10, 4,
+          maskTombstones = true)
         .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
       assert(blueRes == direct, "alias serving diverged from the target artifact")
 
@@ -390,10 +400,10 @@ class AnnLifecycleSpec extends SparkSpec {
       assert(Ann.tombstonesAt(s2, root).count() == 0)
 
       // idempotence: re-upserting the same batch changes nothing served
-      val before = Ann.searchLiveAt(s2, sf0001, root, 20, 10, 4)
+      val before = Ann.search(s2, Ann.Latest(root), queries(20), 10, 4, maskTombstones = true)
         .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
       Ann.upsertVectors(s2, root, inserts.union(updates))
-      val after = Ann.searchLiveAt(s2, sf0001, root, 20, 10, 4)
+      val after = Ann.search(s2, Ann.Latest(root), queries(20), 10, 4, maskTombstones = true)
         .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
       assert(after == before, "re-upserting the same batch changed results")
 
@@ -486,13 +496,13 @@ class AnnLifecycleSpec extends SparkSpec {
     def p(n: String) = new org.apache.hadoop.fs.Path(s"$root/$n")
     try {
       Ann.seedBaseIndex(s2, sf0001, root)
-      val clean = Ann.searchLiveAt(s2, sf0001, root, 10, 5, 4)
+      val clean = Ann.search(s2, Ann.Latest(root), queries(10), 5, 4, maskTombstones = true)
         .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
 
       // crash between rename-aside and tmp-rename, tmp lost: only
       // _centroids_old remains -> the next read must roll BACK
       assert(fs.rename(p("_centroids"), p("_centroids_old")))
-      val rolledBack = Ann.searchLiveAt(s2, sf0001, root, 10, 5, 4)
+      val rolledBack = Ann.search(s2, Ann.Latest(root), queries(10), 5, 4, maskTombstones = true)
         .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
       assert(rolledBack == clean, "roll-back recovery changed results")
       assert(fs.exists(p("_centroids")) && !fs.exists(p("_centroids_old")))
@@ -500,7 +510,7 @@ class AnnLifecycleSpec extends SparkSpec {
       // crash with a COMPLETE tmp (swap died between its two renames):
       // the next read must roll FORWARD to the new copy
       assert(fs.rename(p("_centroids"), p("_centroids_tmp")))
-      val rolledFwd = Ann.searchLiveAt(s2, sf0001, root, 10, 5, 4)
+      val rolledFwd = Ann.search(s2, Ann.Latest(root), queries(10), 5, 4, maskTombstones = true)
         .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
       assert(rolledFwd == clean, "roll-forward recovery changed results")
       assert(fs.exists(p("_centroids")) && !fs.exists(p("_centroids_tmp")))
@@ -603,7 +613,8 @@ class AnnLifecycleSpec extends SparkSpec {
           .as[(Long, Array[Float], Int)])
       assert(Ann.snapshotIndex(s2, root) == 2) // v2: base + delta
       Ann.deleteFromIndexAt(s2, root, $"doc_id" % 17 === 3)
-      val masked = Ann.searchLiveAt(s2, sf0001, root, maxQueryId = 20, k = 10, nProbe = 4)
+      val masked = Ann.search(s2, Ann.Latest(root), queries(20), k = 10, nProbe = 4,
+          maskTombstones = true)
         .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
       assert(masked.nonEmpty && masked.forall(_._3 % 17 != 3))
 
@@ -615,9 +626,10 @@ class AnnLifecycleSpec extends SparkSpec {
       assert(versions == Seq(3), s"expected only the post-compact v3, got $versions")
       // time travel across the boundary: as-of the post-compact snapshot
       // equals the pre-compact tombstone-masked search
-      val asOf3 = Ann.searchAtPath(s2, sf0001, root, 3, maxQueryId = 20, k = 10, nProbe = 4)
+      val asOf3 = Ann.search(s2, Ann.Version(root, 3), queries(20), k = 10, nProbe = 4)
         .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
-      assert(asOf3 == masked, "as-of post-compact snapshot drifted from pre-compact searchLive")
+      assert(asOf3 == masked,
+          "as-of post-compact snapshot drifted from the pre-compact masked search")
 
       // the artifact keeps living: a post-compact add is invisible as-of
       // v3 and the next snapshot numbers v4
@@ -627,10 +639,10 @@ class AnnLifecycleSpec extends SparkSpec {
           .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding", $"label")
           .as[(Long, Array[Float], Int)])
       assert(Ann.snapshotIndex(s2, root) == 4)
-      val asOf3Again = Ann.searchAtPath(s2, sf0001, root, 3, maxQueryId = 20, k = 10, nProbe = 4)
+      val asOf3Again = Ann.search(s2, Ann.Version(root, 3), queries(20), k = 10, nProbe = 4)
         .select($"query_id", $"rnk", $"doc_id").as[(Long, Long, Long)].collect().toSet
       assert(asOf3Again == asOf3, "post-compact ingest leaked into snapshot v3")
-      val asOf4 = Ann.searchAtPath(s2, sf0001, root, 4, maxQueryId = 20, k = 10, nProbe = 4)
+      val asOf4 = Ann.search(s2, Ann.Version(root, 4), queries(20), k = 10, nProbe = 4)
         .select($"doc_id").as[Long].collect().toSet
       assert(asOf4.exists(_ >= 1000000L), "v4 must see the post-compact delta")
     } finally {

@@ -86,9 +86,8 @@ class AnnLiveConcurrencySpec extends SparkSpec {
     serveCalls += 1
     val rows = Ann.withLiveReadRetry() {
       serveAttempts += 1
-      val qv = Array.fill(dim)((1.0 / math.sqrt(dim)).toFloat)
-      val q = Seq((9000000L, qv)).toDF("query_id", "qe")
-      Ann.searchArtifact(s2, q, path, k = 4000, nProbe = 64)
+      val q = Array((9000000L, Array.fill(dim)((1.0 / math.sqrt(dim)).toFloat)))
+      Ann.search(s2, Ann.Latest(path), q, k = 4000, nProbe = 64, maskTombstones = true)
         .select($"doc_id", $"score").as[(Long, Double)].collect()
     }
     val dups = rows.groupBy(_._1).filter(_._2.length > 1).keys
@@ -212,9 +211,9 @@ class AnnLiveConcurrencySpec extends SparkSpec {
     serveCalls += 1
     val rows = Ann.withLiveReadRetry() {
       serveAttempts += 1
-      val qv = Array.fill(dim)((1.0 / math.sqrt(dim)).toFloat)
-      val q = Seq((9000000L, qv)).toDF("query_id", "qe")
-      Ann.graphRefinedSearchAt(s2, q, path, k = 4000, nProbe = 64, seedK = 4000)
+      val q = Array((9000000L, Array.fill(dim)((1.0 / math.sqrt(dim)).toFloat)))
+      Ann.graphRefinedSearch(s2, Ann.Latest(path), q, k = 4000, nProbe = 64, seedK = 4000,
+        maskTombstones = true)
         .select($"doc_id", $"score").as[(Long, Double)].collect()
     }
     val dups = rows.groupBy(_._1).filter(_._2.length > 1).keys

@@ -16,7 +16,8 @@ class AnnSpec extends SparkSpec {
     val exact = VectorSearch.searchFrame(spark, sf001)
       .filter($"rnk" <= 10)
       .select($"query_id", $"doc_id")
-    val ann = Ann.search(spark, sf001, maxQueryId = 100, k = 10, nProbe = np)
+    val ann = Ann.search(spark, Ann.Session(sf001), VectorSearch.queryVectors(spark, sf001, 100),
+        k = 10, nProbe = np)
       .select($"query_id", $"doc_id")
     ann.join(exact, Seq("query_id", "doc_id")).count().toDouble / exact.count()
   }
@@ -62,7 +63,8 @@ class AnnSpec extends SparkSpec {
     val probed = IndexScans.probedLists(queries, Ann.centroidArray(spark, sf0001).toSeq, 2)
     assert(probed.size < Ann.Centroids)
     val read = IndexScans.partitionsRead(
-      Ann.search(spark, sf0001, maxQueryId = 5, k = 3, nProbe = 2))
+      Ann.search(spark, Ann.Session(sf0001), VectorSearch.queryVectors(spark, sf0001, 5), k = 3,
+          nProbe = 2))
     assert(read == probed.size, s"read $read index partitions; the queries probe ${probed.size}")
   }
 
@@ -83,7 +85,8 @@ class AnnSpec extends SparkSpec {
       // probing all 8 partitions reproduces the exact top-10, same as C=32
       val exact = VectorSearch.searchFrame(spark, sf0001)
         .filter($"rnk" <= 10).select($"query_id", $"doc_id")
-      val ann = Ann.search(s2, sf0001, maxQueryId = 100, k = 10, nProbe = 8)
+      val ann = Ann.search(s2, Ann.Session(sf0001), VectorSearch.queryVectors(s2, sf0001, 100),
+          k = 10, nProbe = 8)
         .select($"query_id", $"doc_id")
       assert(ann.join(exact, Seq("query_id", "doc_id")).count() == exact.count())
       // the default session is untouched by s2's override
@@ -111,7 +114,8 @@ class AnnSpec extends SparkSpec {
       // search against the relocated index still reproduces the exact top-10
       val exact = VectorSearch.searchFrame(spark, sf0001)
         .filter($"rnk" <= 10).select($"query_id", $"doc_id")
-      val ann = Ann.search(s2, sf0001, maxQueryId = 100, k = 10, nProbe = Ann.Centroids)
+      val ann = Ann.search(s2, Ann.Session(sf0001), VectorSearch.queryVectors(s2, sf0001, 100),
+          k = 10, nProbe = Ann.Centroids)
         .select($"query_id", $"doc_id")
       assert(ann.join(exact, Seq("query_id", "doc_id")).count() == exact.count())
     } finally {
@@ -124,7 +128,7 @@ class AnnSpec extends SparkSpec {
     import spark.implicits._
     val cents = Ann.centroids(spark, sf0001)
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val sample = Ann.loadIndex(spark, sf0001)
+    val sample = Ann.resolve(spark, Ann.Session(sf0001)).index
       .filter($"doc_id" < 50)
       .select($"doc_id", $"embedding", $"centroid_id")
       .as[(Long, Array[Float], Long)].collect()
@@ -160,20 +164,23 @@ class AnnSpec extends SparkSpec {
   test("time travel: v1 predates the delta, v2 equals the incremental search, manifests nest") {
     import spark.implicits._
     val d = sf0001
-    val v1 = Ann.searchAt(spark, d, 1, maxQueryId = 20, k = 10, nProbe = 4)
+    val path = Ann.buildSnapshottedIndex(spark, d)
+    val v1 = Ann.search(spark, Ann.Version(path, 1), VectorSearch.queryVectors(spark, d, 20),
+        k = 10, nProbe = 4)
       .select($"query_id", $"rnk", $"doc_id").collect()
     // the delta universe must be invisible at snapshot 1
     v1.foreach { r =>
       assert(r.getAs[Long]("doc_id") % Ann.IncrMod != Ann.IncrRem,
         s"snapshot v1 leaked a delta doc: $r")
     }
-    val v2 = Ann.searchAt(spark, d, 2, maxQueryId = 20, k = 10, nProbe = 4)
+    val v2 = Ann.search(spark, Ann.Version(path, 2), VectorSearch.queryVectors(spark, d, 20),
+        k = 10, nProbe = 4)
       .select($"query_id", $"rnk", $"doc_id").collect().toSet
-    val incr = Ann.searchIncremental(spark, d, maxQueryId = 20, k = 10, nProbe = 4)
+    val incr = Ann.search(spark, Ann.Latest(Ann.buildIncrementalIndex(spark, d)),
+        VectorSearch.queryVectors(spark, d, 20), k = 10, nProbe = 4)
       .select($"query_id", $"rnk", $"doc_id").collect().toSet
     assert(v2 == incr, "snapshot v2 drifted from the incremental search")
     // append-only contract: v1's file set is a strict subset of v2's
-    val path = Ann.buildSnapshottedIndex(spark, d)
     def manifest(v: Int): Set[String] =
       java.nio.file.Files.readAllLines(
         java.nio.file.Paths.get(s"${path.stripPrefix("file:")}/_snapshots/v$v.txt"))
@@ -193,16 +200,16 @@ class AnnSpec extends SparkSpec {
       Ann.snapshotIndex(spark, root) // v3
       val expired = Ann.expireSnapshots(spark, root, keepLast = 1)
       assert(expired == Seq(1, 2))
-      val latest = Ann.loadIndexAt(spark, root, 3)
+      val latest = Ann.resolve(spark, Ann.Version(root, 3)).index
       assert(latest.count() > 0)
-      intercept[Exception](Ann.loadIndexAt(spark, root, 1).count())
+      intercept[Exception](Ann.resolve(spark, Ann.Version(root, 1)).index.count())
       // snapshot AFTER expiry must continue the version sequence (max+1,
       // not count+1 — ADVICE r9 medium): never overwrite a live manifest,
       // never mint a version below the newest
       val v4 = Ann.snapshotIndex(spark, root)
       assert(v4 == 4, s"post-expiry snapshot numbered $v4, expected 4")
       assert(Ann.snapshotVersions(spark, root) == Seq(3, 4))
-      assert(Ann.loadIndexAt(spark, root, 4).count() == latest.count())
+      assert(Ann.resolve(spark, Ann.Version(root, 4)).index.count() == latest.count())
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
@@ -213,9 +220,11 @@ class AnnSpec extends SparkSpec {
   test("sharded build + file-level merge serves results identical to the monolith") {
     import spark.implicits._
     for (d <- Seq(sf0001, sf001)) {
-      val mono = Ann.search(spark, d, maxQueryId = 20, k = 10, nProbe = 4)
+      val mono = Ann.search(spark, Ann.Session(d), VectorSearch.queryVectors(spark, d, 20),
+          k = 10, nProbe = 4)
         .select($"query_id", $"rnk", $"doc_id").collect().toSet
-      val merged = Ann.searchSharded(spark, d, maxQueryId = 20, k = 10, nProbe = 4)
+      val merged = Ann.search(spark, Ann.Latest(Ann.buildShardedIndex(spark, d)),
+        VectorSearch.queryVectors(spark, d, 20), k = 10, nProbe = 4)
         .select($"query_id", $"rnk", $"doc_id").collect().toSet
       assert(merged == mono, s"at $d: shard-merge drifted from monolith")
       // the merge lost/duplicated no rows and persisted the frozen quantizer

@@ -35,7 +35,7 @@ class FilteredSearchSpec extends SparkSpec {
   private lazy val annResult = SparkEntry.queries("v19_filtered_ann")(spark, sf0001)
 
   test("v19: partition pruning AND label pushdown compose on the index scan") {
-    import graft.operators.Ann
+    import graft.operators.{Ann, VectorSearch}
     // v19's plan with 2 of its 20 queries: at sf0.001 its 20 queries
     // probe all 32 lists between them, and a full read proves no pruning
     val nq = 2
@@ -43,8 +43,9 @@ class FilteredSearchSpec extends SparkSpec {
       .filter($"vec_id" < nq).select($"embedding").as[Array[Float]].collect().toSeq
     val probed = IndexScans.probedLists(queries, Ann.centroidArray(spark, sf0001).toSeq, 8)
     assert(probed.size < Ann.Centroids)
-    val search = Ann.search(spark, sf0001, maxQueryId = nq, k = 10, nProbe = 8,
-      pred = Some($"label" % 3 === 0))
+    val search = Ann.search(spark, Ann.Session(sf0001), VectorSearch.queryVectors(spark, sf0001,
+        nq),
+      k = 10, nProbe = 8, pred = Some($"label" % 3 === 0))
     val read = IndexScans.partitionsRead(search)
     assert(read == probed.size, s"read $read index partitions; the queries probe ${probed.size}")
     val plan = search.queryExecution.executedPlan.toString
@@ -62,11 +63,11 @@ class FilteredSearchSpec extends SparkSpec {
   }
 
   test("v19: full-probe filtered ANN equals the exact filtered top-k (v18)") {
-    import graft.operators.Ann
+    import graft.operators.{Ann, VectorSearch}
     // probing every partition removes the approximation: the filtered ANN
     // must reproduce the exact filtered scan's top-10 for shared queries
-    val full = Ann.search(spark, sf0001, maxQueryId = 20, k = 10,
-        nProbe = Ann.Centroids, pred = Some($"label" % 3 === 0))
+    val full = Ann.search(spark, Ann.Session(sf0001), VectorSearch.queryVectors(spark, sf0001, 20),
+        k = 10, nProbe = Ann.Centroids, pred = Some($"label" % 3 === 0))
       .select($"query_id", $"doc_id")
     val exact = result.filter($"query_id" < 20).select($"query_id", $"doc_id")
     assert(full.join(exact, Seq("query_id", "doc_id")).count() == exact.count())

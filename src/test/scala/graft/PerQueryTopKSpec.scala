@@ -15,7 +15,8 @@ import graft.plans.{CosineTopK, PerQueryTopK, PerQueryTopKExec}
   * candidates, and a `groupByKey` with Pq's per-query merge over the
   * IVF+PQ candidates. It must do so for `collect()` (the one-job
   * `executeCollect`) and for every other consumer (`count()`, a join,
-  * `.rdd`, which read the merged rows through `doExecute`). */
+  * `.rdd`, which read the merged rows through `doExecute`). A doc
+  * offered twice for one query holds one rank, at its best score. */
 class PerQueryTopKSpec extends SparkSpec {
 
   import spark.implicits._
@@ -28,6 +29,13 @@ class PerQueryTopKSpec extends SparkSpec {
 
   private def queries(n: Int): Array[(Long, Array[Float])] =
     corpus.filter($"id" < n).as[(Long, Array[Float])].collect().sortBy(_._1)
+
+  /** The IVF tier's scored candidates (query_id, doc_id, score) over the
+    * registry artifact. */
+  private def ivfCandidates(nq: Int, nProbe: Int): DataFrame = {
+    val r = Ann.resolve(spark, Ann.Session(sf0001))
+    Ann.scoredOn(spark, queries(nq), r.cents, r.index, nProbe, None).drop("prn")
+  }
 
   /** (query_id, rnk, doc_id, score bits) of a (query_id, doc_id, score,
     * rnk) frame, sorted; collected from the frame's own root. */
@@ -72,7 +80,7 @@ class PerQueryTopKSpec extends SparkSpec {
       parts <- Seq(1, 4)
       (nq, k, nProbe) <- Seq((12, 10, 4), (12, 1, 8), (6, 5000, 2), (0, 10, 4))
     } {
-      val cands = Ann.scoredCandidates(spark, sf0001, nq, nProbe).drop("prn").repartition(parts)
+      val cands = ivfCandidates(nq, nProbe).repartition(parts)
       val shape = s"ivf partitions=$parts queries=$nq k=$k nProbe=$nProbe"
       assertSame(PerQueryTopK.exact(cands, k), BruteForce.rerank(cands, k), shape)
     }
@@ -121,13 +129,44 @@ class PerQueryTopKSpec extends SparkSpec {
     }
   }
 
+  test("a doc offered twice for one query holds one rank, at its best score") {
+    // per query, 30 distinct docs, then some of them offered again: at
+    // the same score, or at a better or worse one
+    val rnd = new scala.util.Random(20261020L)
+    val base = for {
+      q <- 0L until 4L
+      d <- 0L until 30L
+    } yield (q, d, rnd.nextInt(1000) / 1000.0)
+    val equalDups = base.filter(_._2 % 3 == 0)
+    val unequalDups = base.filter(_._2 % 4 == 1)
+      .map { case (q, d, sc) => (q, d, if (d % 8 == 1) sc + 0.25 else sc - 0.25) }
+    for {
+      (dups, rows) <- Seq("equal" -> (base ++ equalDups), "unequal" -> (base ++ unequalDups))
+      parts <- Seq(1, 4)
+      k <- Seq(1, 10, 40) // 40: more than the distinct docs, so every duplicate would show
+    } {
+      val cands = rnd.shuffle(rows).toDF("query_id", "doc_id", "score").repartition(parts)
+      val got = PerQueryTopK.exact(cands, k)
+      val want = PerQueryTopKSpec.distinctTopK(rows, k)
+      val shape = s"$dups-score duplicates partitions=$parts k=$k"
+      assert(bits(got.collect()) == want, s"collect: $shape")
+      assert(bits(got.rdd.collect()) == want, s".rdd: $shape")
+    }
+    // approx and exact apart: the better approx wins and keeps its own
+    // exact score
+    val twice = Seq((0L, 7L, 0.9, 0.1), (0L, 7L, 0.5, 0.8), (0L, 3L, 0.7, 0.4))
+      .toDF("query_id", "doc_id", "approx", "score")
+    assert(PerQueryTopK.of(twice, 2, 2).select($"doc_id", $"score").as[(Long, Double)]
+      .collect().toSeq == Seq((3L, 0.4), (7L, 0.1)))
+  }
+
   test("PerQueryTopKExec counts candidates in its tasks and merged rows on the driver") {
     val df = spark.sql(s"SELECT * FROM ann_search('$sf0001', 3, 5, 4)")
     val rows = df.collect()
     val exec = new AdaptiveSparkPlanHelper {}.collectFirst(df.queryExecution.executedPlan) {
       case e: PerQueryTopKExec => e
     }.getOrElse(fail(s"no PerQueryTopKExec in\n${df.queryExecution.executedPlan}"))
-    val offered = Ann.scoredCandidates(spark, sf0001, 3, 4).count()
+    val offered = ivfCandidates(3, 4).count()
     assert(rows.length == 15)
     assert(exec.metrics("candidates").value == offered)
     assert(exec.metrics("numOutputRows").value == rows.length)
@@ -138,6 +177,19 @@ class PerQueryTopKSpec extends SparkSpec {
 }
 
 object PerQueryTopKSpec {
+
+  /** The one-rank-per-doc contract of the deleted distinct `BruteForce` rerank,
+    * in plain Scala: per query, each doc at its best score, the top k by
+    * (score desc, doc_id asc), ranked from 1. Rows as [[bits]] gives
+    * them: (query_id, rnk, doc_id, score bits), sorted. */
+  def distinctTopK(rows: Seq[(Long, Long, Double)], k: Int): Seq[(Long, Long, Long, Long)] =
+    rows.groupBy(_._1).toSeq.flatMap { case (qid, qrows) =>
+      qrows.groupBy(_._2).map { case (doc, drs) => (doc, drs.map(_._3).max) }.toSeq
+        .sortBy { case (doc, sc) => (-sc, doc) }
+        .take(k)
+        .zipWithIndex
+        .map { case ((doc, sc), r) => (qid, r + 1L, doc, java.lang.Double.doubleToLongBits(sc)) }
+    }.sorted
 
   /** The composition `PerQueryTopK` replaced in the IVF+PQ tier: a
     * `groupByKey(query_id)` shuffle, then per query the top-`rcand` by

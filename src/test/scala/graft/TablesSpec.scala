@@ -109,9 +109,11 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     def annRows(nProbe: Int) =
       s2.sql(s"SELECT query_id, doc_id FROM ann_search('$sf0001', 100, 10, $nProbe)")
         .as[(Long, Long)].collect().toSet
-    def maxProbeRank =
-      Ann.scoredCandidates(s2, sf0001, 5, 1000).agg(org.apache.spark.sql.functions.max($"prn"))
-        .head().getInt(0)
+    def maxProbeRank = {
+      val r = Ann.resolve(s2, Ann.Session(sf0001))
+      Ann.scoredOn(s2, VectorSearch.queryVectors(s2, sf0001, 5), r.cents, r.index, 1000, None)
+        .agg(org.apache.spark.sql.functions.max($"prn")).head().getInt(0)
+    }
     val exact = VectorSearch.searchFrame(spark, sf0001).filter($"rnk" <= 10)
       .select($"query_id", $"doc_id").as[(Long, Long)].collect().toSet
     try {
