@@ -181,11 +181,13 @@ object Functions {
   }
 
   /** Table-function builder for `binary_search(dir, max_query_id, k,
-    * pool)` — the 1-bit tier (v34) through the parser: Hamming
-    * top-`pool` candidates over packed sign codes, exact top-k rescore
-    * (`pool` is the tier's recall dial, the bench's
-    * `bin_operating_point` knob). Completes the tier's surface pair
-    * with the Column API under the shared v34 oracle. */
+    * pool)` — the 1-bit tier (v34) through the parser: one
+    * [[operators.QuantScan]] pass keeps the Hamming top-`pool`
+    * candidates over packed sign codes and rescores them exactly, then
+    * the driver-merged per-query top-k, projected and sorted to
+    * (query_id, rnk, doc_id) (`pool` is the tier's recall dial, the
+    * bench's `bin_operating_point` knob). Completes the tier's surface
+    * pair with the Column API under the shared v34 oracle. */
   private[graft] def binarySearchPlan(
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
@@ -200,9 +202,10 @@ object Functions {
   }
 
   /** Table-function builder for `ivfsq_search(dir, max_query_id, k,
-    * n_probe)` — the IVF+SQ8 tier (v27) through the parser: probe,
-    * pruned byte-ADC, trim, exact rescore, the same plan the Column
-    * API produces. */
+    * n_probe)` — the IVF+SQ8 tier (v27) through the parser: the
+    * driver-side probe, then one [[operators.QuantScan]] pass (byte-ADC
+    * and exact rescore over the probed lists) and the driver-merged
+    * per-query top-k, the same plan the Column API produces. */
   private[graft] def ivfsqSearchPlan(
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {

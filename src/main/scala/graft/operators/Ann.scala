@@ -113,13 +113,18 @@ object Ann extends QModule {
     * is unusable on any multi-node deployment). */
   val IndexRootConf = "spark.graft.ann.indexRoot"
 
-  private def indexPath(s: SparkSession, d: String): String = {
-    val root = s.conf.get(IndexRootConf, "/tmp/graft_index")
-    // v2: the artifact schema carries the corpus `label` metadata column
-    // (filtered search pushes predicates into the pruned scan); the
-    // version suffix keeps label-less v1 artifacts from being served.
-    s"$root/${d.replaceAll("[^A-Za-z0-9.]", "_")}_c${centroidCount(s)}v2"
-  }
+  // v2: the artifact schema carries the corpus `label` metadata column
+  // (filtered search pushes predicates into the pruned scan); the
+  // version suffix keeps label-less v1 artifacts from being served.
+  private def indexPath(s: SparkSession, d: String): String =
+    artifactPath(s, d, s"c${centroidCount(s)}v2")
+
+  /** The directory of dir `d`'s `kind` artifact under the session's index
+    * root, for every tier ([[Ann]], [[Sq]], [[Pq]]). The leaf name starts
+    * with `index`, never with `_` or `.`, so Spark does not take the
+    * artifact root for a hidden path when it reads it. */
+  private[operators] def artifactPath(s: SparkSession, d: String, kind: String): String =
+    s"${s.conf.get(IndexRootConf, "/tmp/graft_index")}/index${d.replaceAll("[^A-Za-z0-9.]", "_")}_$kind"
 
   /** The (fs, path) pair for a location string, resolved against the
     * session's Hadoop conf — works for file:/, hdfs://, s3a://, … */
@@ -695,7 +700,7 @@ object Ann extends QModule {
     * queries, ascending) of the queries probing it; `ranks`: parallel to
     * `lists`, each such query's 1-based probe rank of that centroid;
     * `dots`: centroid_id → every query's coarse dot. */
-  private[operators] final case class Probes(
+  private[graft] final case class Probes(
       lists: Map[Long, Array[Int]],
       ranks: Map[Long, Array[Int]],
       dots: Map[Long, Array[Double]])
@@ -705,7 +710,7 @@ object Ann extends QModule {
     * top-`nProbe` centroids by dot desc, centroid_id asc — the v09 probe
     * contract ([[BruteForce.rankCentroids]]), on the array-order double
     * dot the oracle's unnest sum uses. */
-  private[operators] def probeLists(
+  private[graft] def probeLists(
       queries: Array[(Long, Array[Float])],
       cents: Array[(Long, Array[Float])],
       nProbe: Int): Probes = {

@@ -21,11 +21,11 @@ import graft.{Q, QModule, Tables}
   *     dim slice of the bytes (a columnar scan of a truncated column),
   *     which is the whole point of MRL embeddings.
   *
-  * Both are two-stage plans with the same scale contract as v33: stage 1
-  * is a map-side broadcast-query kernel over the corpus (bounded heap,
-  * nothing corpus-sized shuffles), stage 2 joins the QUERY-BOUNDED
-  * candidate set (≤ q·R rows, broadcast) back to the float column for
-  * exact rescoring. No cartesian, no window sort.
+  * Both run as one [[QuantScan]] pass over the `embeddings` table, each
+  * with its own scorer: per-query top-R heaps by the cheap score, the
+  * exact full-dimension rescore of their members in the same pass, then
+  * the driver-merged global top-R and exact top-k. Nothing corpus-sized
+  * shuffles; no join, no cartesian, no window sort.
   */
 object Compact extends QModule {
 
@@ -71,57 +71,61 @@ object Compact extends QModule {
     h
   }
 
-  /** Stage-1 kernel: per-query top-`pool` docs by (Hamming asc,
-    * doc_id asc). Queries are broadcast as packed codes; each corpus row
-    * is packed once and offered to every query's bounded heap with score
-    * = −hamming (the heap's (score desc, id asc) order is then exactly
-    * the oracle's `ORDER BY ham, doc_id`). */
-  private def hammingCandidates(
-      s: SparkSession,
-      d: String,
-      queries: Array[(Long, Array[Long])],
-      pool: Int,
-      pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(queries)
-    // pred (v50) pre-filters the corpus scan BEFORE the Hamming heaps —
-    // a declarative filter Catalyst pushes into the parquet read, so
-    // the pool is guaranteed over the filtered universe and excluded
-    // rows are never packed or scored
-    pred.foldLeft(emb(s, d))(_ filter _)
-      .select($"vec_id".as("id"), $"embedding".as("vec"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val qs = bc.value
-        val nq = qs.length
-        val heaps = Array.fill(nq)(new graft.functions.TopKAgg.Heap(pool))
-        rows.foreach { case (docId, vec) =>
-          val code = packSigns(vec)
-          var qi = 0
-          while (qi < nq) {
-            if (qs(qi)._1 != docId)
-              heaps(qi).offer(-hamming(qs(qi)._2, code).toDouble, docId)
-            qi += 1
-          }
-        }
-        Iterator.range(0, nq).flatMap { qi =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          heaps(qi).foreach((h, id) => out += ((qs(qi)._1, id, h)))
-          out.iterator
-        }
-      }
-      .toDF("query_id", "doc_id", "neg_ham")
+  /** The binary scorer of [[QuantScan]]: approx = −Hamming(query signs,
+    * row signs), so the kernel's (approx desc, doc_id asc) order is
+    * exactly the oracle's `ORDER BY hd, doc_id`. Its codes are the row's
+    * float vector, whose signs it packs once per row. */
+  private[graft] final class HammingScorer(queries: Array[(Long, Array[Float])])
+      extends QuantScan.Scorer[Array[Float]] {
+    private val qcodes = queries.map(q => packSigns(q._2))
+    def codes: org.apache.spark.sql.Column = col("embedding")
+    def score(vec: Array[Float], list: Long, qis: Array[Int], out: Array[Double]): Unit = {
+      val code = packSigns(vec)
+      var j = 0
+      while (j < qis.length) { out(j) = -hamming(qcodes(qis(j)), code).toDouble; j += 1 }
+    }
   }
 
-  /** Exact full-dimension rescore of a query-bounded (query_id, doc_id)
-    * candidate frame — the shared tail ([[VectorSearch.rescoreExact]]) —
-    * as v34/v35's (query_id, rnk, doc_id) rows in rank order. */
-  private def rescoreExact(
-      s: SparkSession, d: String, cand: DataFrame,
-      maxQ: Int = MaxQ, k: Int = K): DataFrame =
-    VectorSearch.rescoreExact(s, d, cand, maxQ, k)
+  /** The MRL scorer of [[QuantScan]]: approx = the dot of the first
+    * [[PrefixDim]] components, double accumulation in array order. Its
+    * codes are the sliced column — at scale a scan of a PrefixDim-
+    * truncated column, dim/PrefixDim× less I/O. */
+  private[graft] final class PrefixScorer(queries: Array[(Long, Array[Float])])
+      extends QuantScan.Scorer[Array[Float]] {
+    private val qvecs = queries.map(_._2)
+    def codes: org.apache.spark.sql.Column = slice(col("embedding"), 1, PrefixDim)
+    def score(prefix: Array[Float], list: Long, qis: Array[Int], out: Array[Double]): Unit = {
+      var j = 0
+      while (j < qis.length) {
+        val qv = qvecs(qis(j))
+        val n = math.min(qv.length, prefix.length)
+        var s = 0.0
+        var i = 0
+        while (i < n) { s += qv(i).toDouble * prefix(i).toDouble; i += 1 }
+        out(j) = s
+        j += 1
+      }
+    }
+  }
+
+  /** The two-stage search over the `embeddings` table: the scorer's
+    * top-`pool` candidates per query (GLOBAL, so the boundary is the
+    * oracle's `crn <= pool` on any partitioning), exact top-`k` rescore,
+    * as (query_id, rnk, doc_id) rows in rank order. `pred` pre-filters
+    * the scan BEFORE the heaps — a declarative filter Catalyst pushes
+    * into the parquet read — so the pool is guaranteed over the
+    * filtered universe. */
+  private def twoStage(
+      s: SparkSession, d: String, maxQ: Int, k: Int, pool: Int,
+      pred: Option[org.apache.spark.sql.Column],
+      scorer: Array[(Long, Array[Float])] => QuantScan.Scorer[Array[Float]]): DataFrame = {
+    val queries = VectorSearch.queryVectors(s, d, maxQ)
+    val corpus = pred.foldLeft(emb(s, d))(_ filter _)
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    QuantScan.search(corpus, scorer(queries), queries, None, k, pool)
       .select(col("query_id"), col("rnk"), col("doc_id"))
       .orderBy(col("query_id"), col("rnk"))
+  }
 
   /** The v34 two-stage binary search with the dial exposed: Hamming
     * top-`pool` candidates, exact top-`k` rescore — v43's bin tier
@@ -130,28 +134,14 @@ object Compact extends QModule {
     * Hamming scan, completing the filtered matrix on the 1-bit tier. */
   private[graft] def searchBinary(
       s: SparkSession, d: String, maxQ: Int, k: Int, pool: Int,
-      pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    import s.implicits._
-    val queries = emb(s, d).filter($"vec_id" < maxQ)
-      .select($"vec_id", $"embedding")
-      .as[(Long, Array[Float])]
-      .collect()
-      .sortBy(_._1)
-      .map { case (id, v) => (id, packSigns(v)) }
-    // GLOBAL top-pool trim before the rescore (the Pq/Sq RCand
-    // discipline): the per-partition heaps emit up to P×pool rows, and
-    // without this trim the candidate set — and therefore the rescored
-    // top-k — would depend on partitioning and diverge from the
-    // oracle's global `crn <= pool` on any multi-partition corpus.
-    // rerank orders by (neg_ham desc, doc_id) ≡ the oracle's (hd asc,
-    // doc_id), so the boundary is identical.
-    val cand = BruteForce
-      .rerank(
-        hammingCandidates(s, d, queries, pool, pred).withColumnRenamed("neg_ham", "score"),
-        pool)
-      .select(col("query_id"), col("doc_id"))
-    rescoreExact(s, d, cand, maxQ, k)
-  }
+      pred: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    twoStage(s, d, maxQ, k, pool, pred, new HammingScorer(_))
+
+  /** The v35 MRL prefix search: prefix-dot top-[[MrlRescore]], exact
+    * top-[[K]] rescore; `pred` pre-filters the prefix scan (v52). */
+  private def searchPrefix(
+      s: SparkSession, d: String, pred: Option[org.apache.spark.sql.Column]): DataFrame =
+    twoStage(s, d, MaxQ, K, MrlRescore, pred, new PrefixScorer(_))
 
   /** [[searchBinary]] as DuckDB SQL, parameterized like the engine call
     * — self-contained WITH block, embeddable as a subquery (the Pq/Sq
@@ -223,22 +213,12 @@ object Compact extends QModule {
 
   // ---------------------------------------------------------------- v35
   /** Matryoshka prefix search: first pass ranks by the dot of the first
-    * [[PrefixDim]] components (runs on [[BruteForce.topK]] over the
-    * SLICED corpus — at scale this is a scan of a PrefixDim-truncated
-    * column, dim/PrefixDim× less I/O), exact full-dim rescore of the
-    * top-[[MrlRescore]]. */
+    * [[PrefixDim]] components (the SLICED column — at scale a scan of a
+    * PrefixDim-truncated column, dim/PrefixDim× less I/O), exact
+    * full-dim rescore of the top-[[MrlRescore]]. */
   private val v35 = Q(
     "v35_mrl_prefix",
-    (s, d) => {
-      import s.implicits._
-      val sliced = emb(s, d)
-        .select($"vec_id".as("id"), slice($"embedding", 1, PrefixDim).as("vec"))
-        .as[(Long, Array[Float])]
-      val queries = sliced.filter($"id" < MaxQ).collect().sortBy(_._1)
-      val cand = BruteForce.topK(sliced, queries, MrlRescore, excludeSelf = true)
-        .select($"query_id", $"doc_id")
-      rescoreExact(s, d, cand)
-    },
+    (s, d) => searchPrefix(s, d, None),
     Some(s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < $MaxQ),
       pref AS (
         SELECT q.query_id, c.vec_id AS doc_id,
@@ -275,18 +255,7 @@ object Compact extends QModule {
     * and prefix cheapness compose. */
   private val v52 = Q(
     "v52_filtered_mrl",
-    (s, d) => {
-      import s.implicits._
-      val slicedAll = emb(s, d)
-        .select($"vec_id".as("id"), slice($"embedding", 1, PrefixDim).as("vec"), $"label")
-      val queries = slicedAll.filter($"id" < MaxQ)
-        .select($"id", $"vec").as[(Long, Array[Float])].collect().sortBy(_._1)
-      val sliced = slicedAll.filter($"label" % 3 === 0)
-        .select($"id", $"vec").as[(Long, Array[Float])]
-      val cand = BruteForce.topK(sliced, queries, MrlRescore, excludeSelf = true)
-        .select($"query_id", $"doc_id")
-      rescoreExact(s, d, cand)
-    },
+    (s, d) => searchPrefix(s, d, Some(col("label") % 3 === 0)),
     Some(s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < $MaxQ),
       pref AS (
         SELECT q.query_id, c.vec_id AS doc_id,

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Functions, Q, QModule, Tables}
-import graft.functions.TopKAgg
 
 /** Product quantization — the FAISS-PQ-analog compression layer
   * (reference: `notebooks/004-faiss_demo.py:172-249` builds a FAISS index
@@ -32,25 +31,22 @@ import graft.functions.TopKAgg
   * Search is ADC (asymmetric distance computation): per query, one tiny
   * lookup table of query-subvector × codeword dots; each encoded doc
   * scores as the sum of M table lookups ≈ dot(query, reconstruction).
-  * The ADC pass keeps [[RCand]] candidates per query per partition, a
-  * bounded-heap global re-rank trims those to the GLOBAL top-[[RCand]]
-  * (so results don't depend on partitioning), and only that bounded set
-  * is rescored exactly. The flat tier's rescore
-  * ([[VectorSearch.rescoreExact]]) still joins the candidates against a
-  * full scan of the float corpus; the IVF+PQ tier keeps each row's float
-  * vector beside its codes and rescores inside the ADC pass, reading no
-  * float vector outside its probed lists, and merges per query on the
-  * driver ([[searchIvfPq]], [[graft.plans.PerQueryTopK]]).
+  * Both PQ tiers serve through [[QuantScan]]: the flat frame (doc_id,
+  * codes, label, embedding) and the IVF+PQ frame (doc_id, centroid_id,
+  * codes, label, embedding) carry each row's float vector beside its
+  * codes, so one pass keeps the per-query top-[[RCand]] by ADC score and
+  * rescores exactly only those, and the driver merges the GLOBAL
+  * top-[[RCand]] per query (so results don't depend on partitioning)
+  * into the exact top-k. No join back to the float corpus.
   *
   * 100 TB design: training cost is one encode pass per Lloyd step with
   * only centroid-cell averages shuffled; encode is one narrow pass with
-  * the codebook broadcast (no shuffle); the flat tier's ADC scan reads
-  * the encoded corpus (4× smaller than the raw vectors as stored, see
-  * above); per-task candidate heaps emit ≤ p×q×R rows into the global
-  * trim, the same bounded shape as [[BruteForce.topK]]. The IVF+PQ tier
-  * ([[searchIvfPq]], and the bench-scale [[VectorBlocks.ivfpqSearch]])
-  * composes with IVF probe lists and residual encoding — the full FAISS
-  * IVFPQ layout, plus the float vectors of its refine step.
+  * the codebook broadcast (no shuffle); a search is one scan with
+  * per-task candidate heaps, ≤ p×q×R rows reach the driver merge. The
+  * IVF+PQ tier ([[searchIvfPq]], and the bench-scale
+  * [[VectorBlocks.ivfpqSearch]]) composes with IVF probe lists and
+  * residual encoding — the full FAISS IVFPQ layout, plus the float
+  * vectors of its refine step.
   */
 object Pq extends QModule {
 
@@ -241,24 +237,21 @@ object Pq extends QModule {
     out
   }
 
-  /** [[encode]] with the corpus `label` metadata column riding into the
-    * encoded frame — the filtered compressed-tier layout (v48's SQ
-    * pattern brought to PQ, for v49): a predicate over the encoded rows
-    * is a declarative filter the scan prunes before the ADC kernel, no
-    * join back to the float corpus. One memoized frame serves filtered
-    * and unfiltered alike ([[adcCandidates]] selects (doc_id, codes)
-    * explicitly, so the extra column costs nothing). */
-  def encodeTagged(
-      corpus: Dataset[(Long, Array[Float], Int)],
-      codes: Array[(Long, Array[Double])]): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(codes)
-    corpus.mapPartitions { rows =>
-      val cb = bc.value
-      rows.map { case (id, v, tag) => (id, encodeVec(v, cb), tag) }
-    }.toDF("doc_id", "codes", "label")
-  }
+  /** The memoized flat PQ frame (doc_id, codes, label, embedding): the
+    * codes for the ADC scan, `label` for pre-filters (v49: a predicate
+    * over the encoded rows is a declarative filter the scan prunes
+    * before the kernel), the float vector for the exact rescore. */
+  private[graft] def flatFrame(s: SparkSession, d: String): DataFrame =
+    graft.Memo.cached(s, s"pq-encoded:$d") {
+      import s.implicits._
+      val bc = s.sparkContext.broadcast(codebook(s, d))
+      corpusDsTagged(s, d)
+        .mapPartitions { rows =>
+          val cb = bc.value
+          rows.map { case (id, v, tag) => (id, encodeVec(v, cb), tag, v) }
+        }
+        .toDF("doc_id", "codes", "label", "embedding")
+    }
 
   /** Per-query ADC lookup tables, nq × M × |codebook| doubles:
     * lut(qi)(mi * |cb| + j) = dot(query qi subspace mi, codeword j),
@@ -292,104 +285,61 @@ object Pq extends QModule {
     lut
   }
 
-  /** ADC candidate generation: per query build the M × |codebook| lookup
-    * table of subspace dots, score every encoded doc as Σ_m lut(m,
-    * code(m)), keep the top [[RCand]] per query in bounded heaps
-    * (PER-PARTITION — callers re-rank to the global top-R). Scores here
-    * are SELECTION-only (approximate); the caller rescores exactly. */
-  def adcCandidates(
-      encoded: DataFrame,
-      codes: Array[(Long, Array[Double])],
-      queries: Array[(Long, Array[Float])]): DataFrame = {
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(codes)
-    val bcQ = spark.sparkContext.broadcast(queries)
-    encoded
-      .select(col("doc_id").cast("long"), col("codes"))
-      .as[(Long, Array[Long])]
-      .mapPartitions { rows =>
-        val cb = bcC.value
-        val qs = bcQ.value
-        val codeIdx = cb.iterator.zipWithIndex.map { case ((id, _), j) => id -> j }.toMap
-        val nq = qs.length
-        if (nq == 0) Iterator.empty
-        else {
-          val m = qs(0)._2.length / SubDim
-          val lut = adcLuts(qs, cb)
-          val heaps = Array.fill(nq)(new TopKAgg.Heap(RCand))
-          rows.foreach { case (docId, docCodes) =>
-            var q = 0
-            while (q < nq) {
-              if (qs(q)._1 != docId) {
-                var s = 0.0
-                var mi = 0
-                while (mi < m) {
-                  s += lut(q)(mi * cb.length + codeIdx(docCodes(mi)))
-                  mi += 1
-                }
-                heaps(q).offer(s, docId)
-              }
-              q += 1
-            }
-          }
-          Iterator.range(0, nq).flatMap { q =>
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-            heaps(q).foreach((s, id) => out += ((qs(q)._1, id, s)))
-            out.iterator
-          }
-        }
+  /** The PQ scorer of [[QuantScan]]: approx = coarse(list)(q) + Σ_m
+    * lut(q)(m, code_m), double accumulation in subspace order. The
+    * coarse term is 0 on the flat tier and dot(q, centroid) on IVF+PQ,
+    * whose codes encode residuals. */
+  private final class AdcScorer(
+      lut: Array[Array[Double]],
+      ncb: Int,
+      m: Int,
+      codeIdx: Map[Long, Int],
+      coarse: Map[Long, Array[Double]]) extends QuantScan.Scorer[Array[Long]] {
+    private val idx = new Array[Int](m)
+    def codes: org.apache.spark.sql.Column = col("codes")
+    override def forTask(): AdcScorer = new AdcScorer(lut, ncb, m, codeIdx, coarse)
+    def score(codes: Array[Long], list: Long, qis: Array[Int], out: Array[Double]): Unit = {
+      var mi = 0
+      while (mi < m) { idx(mi) = codeIdx(codes(mi)); mi += 1 }
+      val cdots = coarse(list)
+      var j = 0
+      while (j < qis.length) {
+        val q = qis(j)
+        val lq = lut(q)
+        var sc = cdots(q)
+        var t = 0
+        while (t < m) { sc += lq(t * ncb + idx(t)); t += 1 }
+        out(j) = sc
+        j += 1
       }
-      .toDF("query_id", "doc_id", "approx")
+    }
   }
 
-  /** Full PQ search: encode-if-needed corpus → ADC candidates →
-    * bounded-heap GLOBAL trim to the top-[[RCand]] by approx score (so
-    * the candidate boundary is partitioning-independent, matching the
-    * oracle's global `arn <= R`) → exact rescore of that set only →
-    * top-k.
-    * @return (query_id, doc_id, score, rnk) */
-  def search(s: SparkSession, d: String, maxQueryId: Int, k: Int): DataFrame =
-    search(s, d, maxQueryId, k, RCand)
-
-  /** [[search]] with the rescore-pool DIAL exposed (v43's per-tier
-    * operating parameter): global ADC trim to `rcand` candidates before
-    * the exact rescore. Valid for rcand ≤ [[RCand]] — the per-partition
-    * ADC heaps are [[RCand]]-sized, so any global top-rcand within that
-    * bound is exact. */
-  def search(s: SparkSession, d: String, maxQueryId: Int, k: Int, rcand: Int,
-      pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val cb = codebook(s, d)
-    // the tagged frame under the SHARED memo key (v12 uses the same one)
-    // — pred prunes the encoded rows BEFORE the ADC kernel, so the
-    // global rcand trim and k are guaranteed over the filtered universe
-    // (v48's pre-filter discipline on the flat tier)
-    val encodedAll = graft.Memo.cached(s, s"pq-encoded:$d")(
-      encodeTagged(corpusDsTagged(s, d), cb))
-    val encoded = pred.foldLeft(encodedAll)(_ filter _)
-    searchFrom(s, d, encoded, cb, maxQueryId, k, rcand)
-  }
-
-  /** The search pipeline over an arbitrary (doc_id, codes) frame and
-    * codebook — shared by the memoized in-session path ([[search]]) and
-    * the persisted-index serving path ([[searchPersisted]]). */
-  private def searchFrom(
-      s: SparkSession,
-      d: String,
-      encoded: DataFrame,
+  /** The PQ scorer for `queries` over codebook `cb`, its LUTs
+    * ([[adcLuts]]) built once per call. `coarse`: each list's coarse dot
+    * per query (IVF+PQ), or None for the flat tier. */
+  private[graft] def adcScorer(
+      queries: Array[(Long, Array[Float])],
       cb: Array[(Long, Array[Double])],
-      maxQueryId: Int,
-      k: Int,
-      rcand: Int = RCand): DataFrame = {
-    import s.implicits._
-    require(rcand <= RCand, s"rcand $rcand exceeds the per-partition ADC heap bound $RCand")
+      coarse: Option[Map[Long, Array[Double]]]): QuantScan.Scorer[Array[Long]] =
+    new AdcScorer(adcLuts(queries, cb), cb.length,
+      if (queries.isEmpty) 0 else queries(0)._2.length / SubDim,
+      cb.iterator.zipWithIndex.map { case ((id, _), j) => id -> j }.toMap,
+      coarse.getOrElse(Map(0L -> new Array[Double](queries.length))))
+
+  /** Flat PQ search: ADC over every encoded doc, the GLOBAL top-`rcand`
+    * by approx score (so the candidate boundary is partitioning-
+    * independent, matching the oracle's global `arn <= R`), exact rescore
+    * of that set only, top-k — one [[QuantScan]] pass. `rcand` is v43's
+    * per-tier dial; `pred` prunes the encoded rows BEFORE the kernel, so
+    * the rcand trim and k are guaranteed over the filtered universe
+    * (v48's pre-filter discipline on the flat tier).
+    * @return (query_id, doc_id, score, rnk) */
+  def search(s: SparkSession, d: String, maxQueryId: Int, k: Int, rcand: Int = RCand,
+      pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val queries = VectorSearch.queryVectors(s, d, maxQueryId)
-    val cands = BruteForce
-      .rerank(
-        adcCandidates(encoded, cb, queries).withColumnRenamed("approx", "score"),
-        rcand)
-      .select($"query_id", $"doc_id")
-    VectorSearch.rescoreExact(s, d, cands, maxQueryId, k)
+    QuantScan.search(pred.foldLeft(flatFrame(s, d))(_ filter _),
+      adcScorer(queries, codebook(s, d), None), queries, None, k, rcand)
   }
 
   // ----------------------------------------------------- K4: persistence
@@ -402,25 +352,20 @@ object Pq extends QModule {
     * another cluster) searches without re-training or re-encoding.
     * Parquet round-trips the double codebook and long codes exactly, so
     * persisted-serving parity with the in-session path is bit-exact
-    * (v17 shares v13's oracle; PqSpec pins frame equality). */
-  private def pqIndexPath(s: SparkSession, d: String): String = {
-    val root = s.conf.get(Ann.IndexRootConf, "/tmp/graft_index")
-    s"$root/${d.replaceAll("[^A-Za-z0-9.]", "_")}_pq_c${Codes}_s$SubDim"
-  }
-
-  /** Build-if-absent persisted PQ index; returns its location. */
+    * (v17 shares v13's oracle; PqSpec pins frame equality). The codes
+    * are the in-session [[flatFrame]], float vectors included; the
+    * `_refine` suffix keeps a codes-only artifact from being read.
+    * Returns the artifact's location. */
   def buildPersistedIndex(s: SparkSession, d: String): String = {
-    val path = pqIndexPath(s, d)
+    val path = Ann.artifactPath(s, d, s"pq_c${Codes}_s${SubDim}_refine")
     graft.PathLocks.withLock(path) { // see Ann.buildIndex's race note
       val (fs, success) = Ann.hfs(s, s"$path/codes/_SUCCESS")
       if (!fs.exists(success)) {
-        val cb = codebook(s, d)
         val spark = s
         import spark.implicits._
-        cb.toSeq.toDF("code_id", "ce")
+        codebook(s, d).toSeq.toDF("code_id", "ce")
           .write.mode("overwrite").parquet(s"$path/codebook")
-        encode(corpusDs(s, d), cb)
-          .write.mode("overwrite").parquet(s"$path/codes")
+        flatFrame(s, d).write.mode("overwrite").parquet(s"$path/codes")
       }
     }
     path
@@ -432,7 +377,8 @@ object Pq extends QModule {
   // serial driver footer-inference pass per read (tools/ReadProbe).
   private def ddl(s: String) = org.apache.spark.sql.types.StructType.fromDDL(s)
   private val CodebookSchema = ddl("code_id BIGINT, ce ARRAY<DOUBLE>")
-  private val CodesSchema = ddl("doc_id BIGINT, codes ARRAY<BIGINT>")
+  private val CodesSchema = ddl(
+    "doc_id BIGINT, codes ARRAY<BIGINT>, label INT, embedding ARRAY<FLOAT>")
   private val IvfCentroidsSchema = ddl("centroid_id BIGINT, ce ARRAY<FLOAT>")
   private val IvfCodesSchema = ddl(
     "doc_id BIGINT, centroid_id BIGINT, codes ARRAY<BIGINT>, label INT, embedding ARRAY<FLOAT>")
@@ -443,7 +389,9 @@ object Pq extends QModule {
     val path = buildPersistedIndex(s, d)
     val cb = s.read.schema(CodebookSchema).parquet(s"$path/codebook")
       .as[(Long, Array[Double])].collect().sortBy(_._1)
-    searchFrom(s, d, s.read.schema(CodesSchema).parquet(s"$path/codes"), cb, maxQueryId, k)
+    val queries = VectorSearch.queryVectors(s, d, maxQueryId)
+    QuantScan.search(s.read.schema(CodesSchema).parquet(s"$path/codes"),
+      adcScorer(queries, cb, None), queries, None, k, RCand)
   }
 
   // ------------------------------------------- IVF + residual PQ (v53/v54)
@@ -460,8 +408,8 @@ object Pq extends QModule {
   //
   // Layout: one row per doc, (doc_id, centroid_id, codes, label,
   // embedding) — FAISS IVFPQ plus its refine step. The float vector
-  // rides beside the codes, so one pass over the probed lists scores ADC
-  // candidates AND rescores them exactly ([[fusedSearch]]); the frame is
+  // rides beside the codes, so one [[QuantScan]] pass over the probed
+  // lists scores ADC candidates AND rescores them exactly; the frame is
   // the only cached copy of the float vectors.
 
   /** Every corpus vector with its nearest coarse centroid (max dot, ties
@@ -539,18 +487,11 @@ object Pq extends QModule {
     fusedSearch(pred.foldLeft(ivfPqFrame(s, d))(_ filter _), residCodebook(s, d),
       Ann.centroidArray(s, d), VectorSearch.queryVectors(s, d, maxQueryId), k, nProbe, rcand)
 
-  /** The IVF+PQ serving kernel over a (doc_id, centroid_id, codes,
-    * embedding) frame, shared by the memoized in-session path
-    * ([[searchIvfPq]]) and the persisted-index path
-    * ([[searchIvfPqPersisted]]). The probe runs on the driver
-    * ([[Ann.probeLists]]); the scan keeps only the probed lists' rows.
-    * One partition pass ([[fusedPartition]]) emits each partition's
-    * per-query top-[[RCand]] by approx score with their exact scores;
-    * the driver-merged [[graft.plans.PerQueryTopK]] keeps the global
-    * top-`rcand` by approx and returns the exact top-k among them. A
-    * partition's top-[[RCand]] holds every global top-`rcand` member it
-    * contains, so the answer is independent of partitioning. The call
-    * runs as one job with no shuffle.
+  /** IVF+PQ search over a (doc_id, centroid_id, codes, embedding) frame,
+    * shared by the memoized in-session path ([[searchIvfPq]]) and the
+    * persisted-index path ([[searchIvfPqPersisted]]): the driver-side
+    * probe ([[Ann.probeLists]]), then [[QuantScan]] with the residual
+    * ADC scorer over the probed lists' rows.
     * @return (query_id, doc_id, score DOUBLE, rnk BIGINT) */
   private[graft] def fusedSearch(
       frame: DataFrame,
@@ -560,107 +501,9 @@ object Pq extends QModule {
       k: Int,
       nProbe: Int,
       rcand: Int): DataFrame = {
-    require(rcand <= RCand, s"rcand $rcand exceeds the per-partition ADC heap bound $RCand")
-    graft.plans.PerQueryTopK.of(fusedCandidates(frame, rcb, cents, queries, nProbe), k, rcand)
-  }
-
-  /** [[fusedSearch]]'s candidates before the per-query merge: the
-    * probed-list filter and [[fusedPartition]]. Rows of unprobed lists
-    * are filtered out before the kernel deserializes anything.
-    * @return (query_id, doc_id, approx, score) */
-  private[graft] def fusedCandidates(
-      frame: DataFrame,
-      rcb: Array[(Long, Array[Double])],
-      cents: Array[(Long, Array[Float])],
-      queries: Array[(Long, Array[Float])],
-      nProbe: Int): DataFrame = {
-    val s = frame.sparkSession
-    import s.implicits._
     val probes = Ann.probeLists(queries, cents, nProbe)
-    val bc = s.sparkContext.broadcast((queries, rcb, probes.lists, probes.dots))
-    frame
-      .filter($"centroid_id".isin(probes.lists.keys.toSeq.sorted: _*))
-      .select($"doc_id", $"centroid_id", $"codes", $"embedding")
-      .as[(Long, Long, Array[Long], Array[Float])]
-      .mapPartitions { rows =>
-        val (qs, cb, lists, dots) = bc.value
-        fusedPartition(rows, qs, cb, lists, dots)
-      }
-      .toDF("query_id", "doc_id", "approx", "score")
-  }
-
-  /** One partition of [[fusedSearch]]: each row is ADC-scored only by
-    * the queries probing its list, as qcDots(cid)(qi) + Σ_m lut(qi)(m,
-    * code) — coarse dot plus residual LUT sum, self skipped — into
-    * per-query top-[[RCand]] heaps; the LUTs ([[adcLuts]]) are built
-    * once per partition. A row some heap kept keeps its float vector;
-    * at the end each heap member gets its exact array-order double dot
-    * (the `vec_dot` arithmetic). A plain method with a while loop, not a
-    * capturing lambda (see CosineCandidatesExec).
-    * @return (query_id, doc_id, approx, score) */
-  private def fusedPartition(
-      rows: Iterator[(Long, Long, Array[Long], Array[Float])],
-      qs: Array[(Long, Array[Float])],
-      cb: Array[(Long, Array[Double])],
-      lists: Map[Long, Array[Int]],
-      dots: Map[Long, Array[Double]]): Iterator[(Long, Long, Double, Double)] = {
-    val nq = qs.length
-    if (nq == 0) Iterator.empty
-    else {
-      val ncb = cb.length
-      val m = qs(0)._2.length / SubDim
-      val codeIdx = cb.iterator.zipWithIndex.map { case ((id, _), j) => id -> j }.toMap
-      val lut = adcLuts(qs, cb)
-      val heaps = Array.fill(nq)(new TopKAgg.Heap(RCand))
-      val kept = scala.collection.mutable.HashMap.empty[Long, Array[Float]]
-      val idx = new Array[Int](m)
-      while (rows.hasNext) {
-        val (docId, cid, codes, vec) = rows.next()
-        val qis = lists.getOrElse(cid, Array.emptyIntArray)
-        if (qis.nonEmpty) {
-          var mi = 0
-          while (mi < m) { idx(mi) = codeIdx(codes(mi)); mi += 1 }
-          val cdots = dots(cid)
-          var keep = false
-          var j = 0
-          while (j < qis.length) {
-            val q = qis(j)
-            if (qs(q)._1 != docId) {
-              val lq = lut(q)
-              var sc = cdots(q)
-              var t = 0
-              while (t < m) { sc += lq(t * ncb + idx(t)); t += 1 }
-              if (heaps(q).offer(sc, docId)) keep = true
-            }
-            j += 1
-          }
-          if (keep) kept(docId) = vec
-        }
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Double)]
-      var qi = 0
-      while (qi < nq) {
-        val (qid, qv) = qs(qi)
-        heaps(qi).foreach { (approx, docId) =>
-          val v = kept(docId)
-          val n = math.min(qv.length, v.length)
-          var sc = 0.0
-          var i = 0
-          while (i < n) { sc += qv(i).toDouble * v(i).toDouble; i += 1 }
-          out += ((qid, docId, approx, sc))
-        }
-        qi += 1
-      }
-      out.iterator
-    }
-  }
-
-  /** The IVF+PQ artifact directory. The `_refine` suffix marks the layout
-    * with the float vectors ([[IvfCodesSchema]]); an artifact written
-    * before it (codes only) sits under another name and is never read. */
-  private def ivfPqIndexPath(s: SparkSession, d: String): String = {
-    val root = s.conf.get(Ann.IndexRootConf, "/tmp/graft_index")
-    s"$root/${d.replaceAll("[^A-Za-z0-9.]", "_")}_ivfpq_c${Codes}_s${SubDim}_refine"
+    QuantScan.search(frame, adcScorer(queries, rcb, Some(probes.dots)), queries, Some(probes),
+      k, rcand)
   }
 
   /** K4 for the IVF+PQ tier (mirrors [[buildPersistedIndex]]): the
@@ -670,9 +513,11 @@ object Pq extends QModule {
     * frame written is the in-session one. Parquet round-trips float
     * centroid arrays, double codewords, long codes and float vectors
     * exactly, so persisted serving is bit-identical to the in-session
-    * pipeline (v55 shares v53's oracle). */
+    * pipeline (v55 shares v53's oracle). The `_refine` suffix marks the
+    * layout with the float vectors ([[IvfCodesSchema]]); an artifact
+    * written before it (codes only) sits under another name. */
   def buildPersistedIvfPq(s: SparkSession, d: String): String = {
-    val path = ivfPqIndexPath(s, d)
+    val path = Ann.artifactPath(s, d, s"ivfpq_c${Codes}_s${SubDim}_refine")
     graft.PathLocks.withLock(path) { // see Ann.buildIndex's race note
       val (fs, success) = Ann.hfs(s, s"$path/codes/_SUCCESS")
       if (!fs.exists(success)) {
@@ -786,8 +631,7 @@ object Pq extends QModule {
     "v12_pq_encode",
     (s, d) => {
       import s.implicits._
-      val cb = codebook(s, d)
-      graft.Memo.cached(s, s"pq-encoded:$d")(encodeTagged(corpusDsTagged(s, d), cb))
+      flatFrame(s, d)
         .select(posexplode($"codes").as(Seq("m", "code_id")))
         .groupBy($"m", $"code_id")
         .agg(count(lit(1)).as("n_docs"))
@@ -877,7 +721,7 @@ object Pq extends QModule {
   // ---------------------------------------------------------------- v49
   /** FILTERED PQ search (round 12; completes the filtered matrix on the
     * flat compressed tier next to v48's probed one): the label rides in
-    * the encoded frame ([[encodeTagged]]), the predicate prunes encoded
+    * the encoded frame ([[flatFrame]]), the predicate prunes encoded
     * rows BEFORE the ADC kernel — so the GLOBAL rcand trim and k are
     * guaranteed over the filtered universe (a post-filtered trim
     * returns < rcand filtered candidates and hash-mismatches the

@@ -22,12 +22,14 @@ import graft.{Q, QModule, Tables}
   *     trained bounds are bit-identical on any partitioning and engine
   *     (no Lloyd, no float-mean divergence class at all).
   *   - ENCODE is a narrow map producing one `Array[Byte]` per doc
-  *     (dim bytes — 4× compression, no shuffle).
-  *   - SEARCH is the [[Pq.adcCandidates]] pipeline shape: asymmetric
-  *     distance over the compressed codes (query stays float), global
-  *     top-[[RCand]] trim via the bounded-heap rerank (partitioning-
-  *     independent candidate boundary), exact rescore of the candidate
-  *     set only, final top-k.
+  *     (dim bytes — 4× compression, no shuffle), with the doc's IVF
+  *     assignment, `label` and float vector beside the codes.
+  *   - SEARCH is one [[QuantScan]] pass, as for [[Pq]]: asymmetric
+  *     distance over the compressed codes (query stays float) into
+  *     per-query top-[[RCand]] heaps, exact rescore of their members
+  *     only, then the driver-merged global top-[[RCand]] (partitioning-
+  *     independent candidate boundary) and the final top-k. The flat
+  *     tier is the IVF frame with every list probed.
   *
   * Cross-engine determinism: the oracle replays the IDENTICAL pipeline in
   * SQL — same bounds (exact min/max), same encode expression
@@ -122,6 +124,16 @@ object Sq extends QModule {
     if (step == 0.0) 0
     else math.max(0.0, math.min(math.floor((x - lo) / step + 0.5), Levels.toDouble)).toInt
 
+  private def encodeVec(vec: Array[Float], lo: Array[Double], st: Array[Double]): Array[Byte] = {
+    val codes = new Array[Byte](vec.length)
+    var i = 0
+    while (i < vec.length) {
+      codes(i) = encodeComponent(vec(i).toDouble, lo(i), st(i)).toByte
+      i += 1
+    }
+    codes
+  }
+
   /** Narrow-map SQ8 encode: (doc_id, codes byte[dim]) — 4× compression,
     * no shuffle. */
   def encode(
@@ -130,257 +142,114 @@ object Sq extends QModule {
       hi: Array[Double]): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val bcLo = spark.sparkContext.broadcast(lo)
-    val bcStep = spark.sparkContext.broadcast(steps(lo, hi))
+    val bc = spark.sparkContext.broadcast((lo, steps(lo, hi)))
     corpus
-      .map { case (id, vec) =>
-        val l = bcLo.value
-        val st = bcStep.value
-        val codes = new Array[Byte](vec.length)
-        var i = 0
-        while (i < vec.length) {
-          codes(i) = encodeComponent(vec(i).toDouble, l(i), st(i)).toByte
-          i += 1
-        }
-        (id, codes)
-      }
+      .map { case (id, vec) => (id, encodeVec(vec, bc.value._1, bc.value._2)) }
       .toDF("doc_id", "codes")
   }
 
-  /** Asymmetric-distance candidates over the compressed codes: per task,
-    * decode-and-dot each doc against every broadcast query with a bounded
-    * [[graft.functions.TopKAgg.Heap]] — the [[Pq.adcCandidates]] shape at
-    * 1 byte/dim. Accumulation is `Σ qᵢ·(loᵢ + codeᵢ·stepᵢ)` in array
-    * order — the identical float-op sequence the oracle's unnest dot
-    * runs. */
-  def adcCandidates(
-      encoded: DataFrame,
-      lo: Array[Double],
-      hi: Array[Double],
-      queries: Array[(Long, Array[Float])]): DataFrame = {
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    val bcLo = spark.sparkContext.broadcast(lo)
-    val bcStep = spark.sparkContext.broadcast(steps(lo, hi))
-    val bcQ = spark.sparkContext.broadcast(queries)
-    encoded
-      .select(col("doc_id").cast("long"), col("codes"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        val l = bcLo.value
-        val st = bcStep.value
-        val qs = bcQ.value
-        val nq = qs.length
-        val qids = new Array[Long](nq)
-        val qvecs = new Array[Array[Float]](nq)
-        var t = 0
-        while (t < nq) { qids(t) = qs(t)._1; qvecs(t) = qs(t)._2; t += 1 }
-        val heaps = Array.fill(nq)(new graft.functions.TopKAgg.Heap(RCand))
-        rows.foreach { case (docId, codes) =>
-          var qi = 0
-          while (qi < nq) {
-            if (qids(qi) != docId) {
-              val qv = qvecs(qi)
-              val n = math.min(qv.length, codes.length)
-              var s = 0.0
-              var i = 0
-              while (i < n) {
-                s += qv(i).toDouble * (l(i) + (codes(i) & 0xFF).toDouble * st(i))
-                i += 1
-              }
-              heaps(qi).offer(s, docId)
-            }
-            qi += 1
-          }
+  /** The trained bounds, memoized per session × dir. */
+  private def bounds(s: SparkSession, d: String): (Array[Double], Array[Double]) =
+    graft.Memo.cachedValue(s, s"sq-bounds:$d")(trainBounds(corpusDs(s, d)))
+
+  /** The memoized SQ8 frame (doc_id, centroid_id, codes, label,
+    * embedding), built in one narrow map: each corpus vector's argmax-dot
+    * centroid ([[BruteForce.nearestCentroid]] — the [[Ann]] assignment
+    * contract, ties to the smallest centroid id), its byte codes, its
+    * `label` (a predicate over the encoded rows is a declarative filter
+    * the scan prunes, v48) and its float vector for the exact rescore.
+    * No join between the build artifacts, no shuffle. */
+  private[graft] def frame(s: SparkSession, d: String): DataFrame =
+    graft.Memo.cached(s, s"sq-assigned:$d") {
+      import s.implicits._
+      val (lo, hi) = bounds(s, d)
+      val bc = s.sparkContext.broadcast((Ann.centroidArray(s, d), lo, steps(lo, hi)))
+      corpusDsTagged(s, d)
+        .map { case (id, vec, tag) =>
+          val (cents, l, st) = bc.value
+          (id, BruteForce.nearestCentroid(vec, cents)._1, encodeVec(vec, l, st), tag, vec)
         }
-        Iterator.range(0, nq).flatMap { qi =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          heaps(qi).foreach((s, id) => out += ((qids(qi), id, s)))
-          out.iterator
+        .toDF("doc_id", "centroid_id", "codes", "label", "embedding")
+    }
+
+  /** The SQ8 scorer of [[QuantScan]]: approx = `Σ qᵢ·(loᵢ + codeᵢ·stepᵢ)`
+    * accumulated in array order — the identical float-op sequence the
+    * oracle's unnest dot runs. */
+  private final class Sq8Scorer(qvecs: Array[Array[Float]], lo: Array[Double], st: Array[Double])
+      extends QuantScan.Scorer[Array[Byte]] {
+    def codes: org.apache.spark.sql.Column = col("codes")
+    def score(codes: Array[Byte], list: Long, qis: Array[Int], out: Array[Double]): Unit = {
+      var j = 0
+      while (j < qis.length) {
+        val qv = qvecs(qis(j))
+        val n = math.min(qv.length, codes.length)
+        var s = 0.0
+        var i = 0
+        while (i < n) {
+          s += qv(i).toDouble * (lo(i) + (codes(i) & 0xFF).toDouble * st(i))
+          i += 1
         }
+        out(j) = s
+        j += 1
       }
-      .toDF("query_id", "doc_id", "approx")
+    }
   }
 
-  /** Full SQ8 search: train-if-needed bounds → encode (memoized) → ADC
-    * candidates → global top-[[RCand]] trim → exact rescore of that set
-    * only → top-k. Same pipeline contract as [[Pq.search]].
+  /** The SQ8 scorer for `queries` under bounds [lo, hi]. */
+  private[graft] def scorer(queries: Array[(Long, Array[Float])], lo: Array[Double],
+      hi: Array[Double]): QuantScan.Scorer[Array[Byte]] =
+    new Sq8Scorer(queries.map(_._2), lo, steps(lo, hi))
+
+  /** Flat SQ8 search: every query scores every encoded doc, global
+    * top-[[RCand]] by approx, exact rescore of that set only, top-k —
+    * the [[frame]] with every list probed. Same contract as [[Pq.search]].
     * @return (query_id, doc_id, score, rnk) */
   def search(s: SparkSession, d: String, maxQueryId: Int, k: Int): DataFrame = {
-    val (lo, hi) = graft.Memo.cachedValue(s, s"sq-bounds:$d")(trainBounds(corpusDs(s, d)))
-    val encoded = graft.Memo.cached(s, s"sq-encoded:$d")(encode(corpusDs(s, d), lo, hi))
-    searchFrom(s, d, encoded, lo, hi, maxQueryId, k)
-  }
-
-  /** The search pipeline over an arbitrary (doc_id, codes) frame and
-    * bounds — shared by the memoized in-session path ([[search]]) and
-    * the persisted-index serving path ([[searchPersisted]]). */
-  private def searchFrom(
-      s: SparkSession,
-      d: String,
-      encoded: DataFrame,
-      lo: Array[Double],
-      hi: Array[Double],
-      maxQueryId: Int,
-      k: Int): DataFrame = {
-    import s.implicits._
+    val (lo, hi) = bounds(s, d)
     val queries = VectorSearch.queryVectors(s, d, maxQueryId)
-    val cands = BruteForce
-      .rerank(
-        adcCandidates(encoded, lo, hi, queries).withColumnRenamed("approx", "score"),
-        RCand)
-      .select($"query_id", $"doc_id")
-    VectorSearch.rescoreExact(s, d, cands, maxQueryId, k)
+    QuantScan.search(frame(s, d), scorer(queries, lo, hi), queries, None, k, RCand)
   }
 
   // --------------------------------------------------- IVF composition
-  /** One-pass IVF-assign + SQ8-encode build: each corpus vector gets its
-    * argmax-dot centroid ([[BruteForce.nearestCentroid]] — the [[Ann]]
-    * assignment contract, ties to the smallest centroid id) AND its byte
-    * codes in the same narrow map — no join between the two build
-    * artifacts, no shuffle at all. The corpus `label` metadata column
-    * rides into the encoded frame — the layout filtered
-    * compressed-tier search needs (v48): a predicate over the encoded
-    * rows is a declarative filter the scan prunes, not a join back to
-    * the float corpus. One frame serves BOTH the filtered and
-    * unfiltered paths ([[adcProbed]] selects its three columns
-    * explicitly, so the extra column costs the unfiltered path
-    * nothing). */
-  def encodeAssignedTagged(
-      corpus: Dataset[(Long, Array[Float], Int)],
-      cents: Array[(Long, Array[Float])],
-      lo: Array[Double],
-      hi: Array[Double]): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(cents)
-    val bcLo = spark.sparkContext.broadcast(lo)
-    val bcStep = spark.sparkContext.broadcast(steps(lo, hi))
-    corpus
-      .map { case (id, vec, tag) =>
-        val l = bcLo.value
-        val st = bcStep.value
-        val codes = new Array[Byte](vec.length)
-        var i = 0
-        while (i < vec.length) {
-          codes(i) = encodeComponent(vec(i).toDouble, l(i), st(i)).toByte
-          i += 1
-        }
-        (id, BruteForce.nearestCentroid(vec, bcC.value)._1, codes, tag)
-      }
-      .toDF("doc_id", "centroid_id", "codes", "label")
-  }
-
-  /** Probed ADC candidates: like [[adcCandidates]] but each doc is
-    * scored ONLY by the queries probing its centroid (per-centroid query
-    * lists, the [[BruteForce.topKProbed]] shape) — at nProbe of C
-    * centroids ~nProbe/C of the byte rows are touched per query. */
-  def adcProbed(
-      assigned: DataFrame,
-      lo: Array[Double],
-      hi: Array[Double],
-      queries: Array[(Long, Array[Float])],
-      probes: Map[Long, Array[Int]]): DataFrame = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val bcLo = spark.sparkContext.broadcast(lo)
-    val bcStep = spark.sparkContext.broadcast(steps(lo, hi))
-    val bcQ = spark.sparkContext.broadcast(queries)
-    val bcP = spark.sparkContext.broadcast(probes)
-    assigned
-      .select(col("doc_id").cast("long"), col("centroid_id").cast("long"), col("codes"))
-      .as[(Long, Long, Array[Byte])]
-      .mapPartitions { rows =>
-        val l = bcLo.value
-        val st = bcStep.value
-        val qs = bcQ.value
-        val byCid = bcP.value
-        val nq = qs.length
-        val heaps = Array.fill(nq)(new graft.functions.TopKAgg.Heap(RCand))
-        rows.foreach { case (docId, cid, codes) =>
-          val qlist = byCid.getOrElse(cid, Array.emptyIntArray)
-          var j = 0
-          while (j < qlist.length) {
-            val qi = qlist(j)
-            if (qs(qi)._1 != docId) {
-              val qv = qs(qi)._2
-              val n = math.min(qv.length, codes.length)
-              var s = 0.0
-              var i = 0
-              while (i < n) {
-                s += qv(i).toDouble * (l(i) + (codes(i) & 0xFF).toDouble * st(i))
-                i += 1
-              }
-              heaps(qi).offer(s, docId)
-            }
-            j += 1
-          }
-        }
-        Iterator.range(0, nq).flatMap { qi =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          heaps(qi).foreach((s, id) => out += ((qs(qi)._1, id, s)))
-          out.iterator
-        }
-      }
-      .toDF("query_id", "doc_id", "approx")
-  }
-
   /** IVF + SQ8 search — the composition the kernel bench times
     * ([[VectorBlocks.ivfsqSearch]]) at registry scale under the oracle
     * gate: probe the top-nProbe [[Ann]] centroids per query (same probe
-    * arithmetic and ties as v09), ADC-scan ONLY the probed inverted
-    * lists' byte codes, global RCand trim, exact rescore, top-k. */
+    * arithmetic and ties as v09), then one [[QuantScan]] pass over ONLY
+    * the probed lists' rows: byte-ADC, global RCand trim, exact rescore,
+    * top-k. `pred` prunes the frame's rows BEFORE the kernel — the
+    * pre-filter discipline (k and the RCand trim stay guaranteed over
+    * the filtered universe within the probe set), with no join back to
+    * the float corpus. */
   def searchIvf(s: SparkSession, d: String, maxQueryId: Int, k: Int, nProbe: Int,
       pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    import s.implicits._
-    val (lo, hi) = graft.Memo.cachedValue(s, s"sq-bounds:$d")(trainBounds(corpusDs(s, d)))
-    val cents = Ann.centroidArray(s, d)
-    // ONE memoized encoded frame serves filtered and unfiltered alike:
-    // the label column rides in the encode (v48), so `pred` is a
-    // declarative filter the scan prunes BEFORE the ADC kernel — the
-    // pre-filter discipline (k and the RCand trim stay guaranteed over
-    // the filtered universe within the probe set), with no join back to
-    // the float corpus. The rescore stays automatically filtered: its
-    // candidate set only ever contains surviving docs.
-    val assignedAll = graft.Memo.cached(s, s"sq-assigned:$d")(
-      encodeAssignedTagged(corpusDsTagged(s, d), cents, lo, hi))
-    val assigned = pred.foldLeft(assignedAll)(_ filter _)
+    val (lo, hi) = bounds(s, d)
     val queries = VectorSearch.queryVectors(s, d, maxQueryId)
-    val cands = BruteForce
-      .rerank(
-        adcProbed(assigned, lo, hi, queries, Ann.probeLists(queries, cents, nProbe).lists)
-          .withColumnRenamed("approx", "score"),
-        RCand)
-      .select($"query_id", $"doc_id")
-    VectorSearch.rescoreExact(s, d, cands, maxQueryId, k)
+    QuantScan.search(pred.foldLeft(frame(s, d))(_ filter _), scorer(queries, lo, hi), queries,
+      Some(Ann.probeLists(queries, Ann.centroidArray(s, d), nProbe)), k, RCand)
   }
 
   // ----------------------------------------------------- K4: persistence
   /** K4 for the SQ8 tier (mirrors [[Pq.buildPersistedIndex]]): trained
-    * bounds + encoded byte codes written once as parquet under the same
-    * configurable Hadoop-FS root ([[Ann.IndexRootConf]]), build-if-
-    * absent. Parquet round-trips the double bounds and binary codes
+    * bounds + the in-session [[frame]] (byte codes beside the float
+    * vectors) written once as parquet under the same configurable
+    * Hadoop-FS root ([[Ann.IndexRootConf]]), build-if-absent. Parquet
+    * round-trips the double bounds, binary codes and float vectors
     * exactly, so persisted serving is bit-identical to the in-session
-    * pipeline (v26 shares v23's oracle). */
-  private def sqIndexPath(s: SparkSession, d: String): String = {
-    val root = s.conf.get(Ann.IndexRootConf, "/tmp/graft_index")
-    s"$root/${d.replaceAll("[^A-Za-z0-9.]", "_")}_sq$Levels"
-  }
-
-  /** Build-if-absent persisted SQ8 index; returns its location. */
+    * pipeline (v26 shares v23's oracle). The `_refine` suffix keeps a
+    * codes-only artifact from being read. Returns the artifact's
+    * location. */
   def buildPersistedIndex(s: SparkSession, d: String): String = {
-    val path = sqIndexPath(s, d)
+    val path = Ann.artifactPath(s, d, s"sq${Levels}_refine")
     graft.PathLocks.withLock(path) { // see Ann.buildIndex's race note
       val (fs, success) = Ann.hfs(s, s"$path/codes/_SUCCESS")
       if (!fs.exists(success)) {
         val spark = s
         import spark.implicits._
-        val (lo, hi) = trainBounds(corpusDs(s, d))
+        val (lo, hi) = bounds(s, d)
         lo.zip(hi).zipWithIndex.map { case ((l, h), i) => (i, l, h) }.toSeq
           .toDF("dim", "lo", "hi")
           .write.mode("overwrite").parquet(s"$path/bounds")
-        encode(corpusDs(s, d), lo, hi)
-          .write.mode("overwrite").parquet(s"$path/codes")
+        frame(s, d).write.mode("overwrite").parquet(s"$path/codes")
       }
     }
     path
@@ -392,17 +261,18 @@ object Sq extends QModule {
   // footer-inference pass per read (tools/ReadProbe: 78–93 → 10–16 ms).
   private def ddl(str: String) = org.apache.spark.sql.types.StructType.fromDDL(str)
   private val BoundsSchema = ddl("dim INT, lo DOUBLE, hi DOUBLE")
-  private val SqCodesSchema = ddl("doc_id BIGINT, codes BINARY")
+  private val SqCodesSchema = ddl(
+    "doc_id BIGINT, centroid_id BIGINT, codes BINARY, label INT, embedding ARRAY<FLOAT>")
 
   /** SQ8 search served from the PERSISTED index artifacts only. */
   def searchPersisted(s: SparkSession, d: String, maxQueryId: Int, k: Int): DataFrame = {
     import s.implicits._
     val path = buildPersistedIndex(s, d)
-    val bounds = s.read.schema(BoundsSchema).parquet(s"$path/bounds")
+    val bs = s.read.schema(BoundsSchema).parquet(s"$path/bounds")
       .as[(Int, Double, Double)].collect().sortBy(_._1)
-    searchFrom(
-      s, d, s.read.schema(SqCodesSchema).parquet(s"$path/codes"),
-      bounds.map(_._2), bounds.map(_._3), maxQueryId, k)
+    val queries = VectorSearch.queryVectors(s, d, maxQueryId)
+    QuantScan.search(s.read.schema(SqCodesSchema).parquet(s"$path/codes"),
+      scorer(queries, bs.map(_._2), bs.map(_._3)), queries, None, k, RCand)
   }
 
   // ------------------------------------------------------------ oracle SQL
@@ -528,9 +398,9 @@ object Sq extends QModule {
 
   // ---------------------------------------------------------------- v27
   /** IVF + SQ8 end to end under the oracle gate: the composition the
-    * kernel bench times ([[VectorBlocks.ivfsqSearch]]) — probe, pruned
-    * byte-ADC, trim, exact rescore — with nProbe 4 of [[Ann.Centroids]]
-    * partitions. */
+    * kernel bench times ([[VectorBlocks.ivfsqSearch]]) — probe, then one
+    * pass of pruned byte-ADC and exact rescore, then the driver merge —
+    * with nProbe 4 of [[Ann.Centroids]] partitions. */
   private val v27 = Q(
     "v27_ivfsq_topk",
     (s, d) => {
@@ -558,7 +428,7 @@ object Sq extends QModule {
     * with IVF+SQ8 (v48; round 12). At 100 TB the float tier is too big
     * to serve filters from — the predicate has to run against the
     * compressed scan tier, which is exactly this composition: the label
-    * rides in the encoded frame ([[encodeAssignedTagged]]), the
+    * rides in the encoded frame ([[frame]]), the
     * predicate prunes the encoded rows BEFORE the ADC kernel (k and the
     * RCand trim guaranteed over the filtered universe within the probe
     * set — the v19 pre-filter discipline), and the exact rescore only

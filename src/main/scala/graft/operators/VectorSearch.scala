@@ -46,26 +46,6 @@ object VectorSearch extends QModule {
       .as[(Long, Array[Float])].collect().sortBy(_._1)
   }
 
-  /** Exact rescore of a bounded (query_id, doc_id) candidate frame
-    * against the float corpus, then the final top-k: the tail the
-    * code-scan tiers ([[Sq]], [[Pq]]) share. Candidates are q × RCand
-    * rows (tiny), so both joins broadcast them and only candidate
-    * vectors are re-read. */
-  private[operators] def rescoreExact(
-      s: SparkSession, d: String, cands: DataFrame, maxQueryId: Int, k: Int): DataFrame = {
-    import s.implicits._
-    val e = emb(s, d)
-    val rescored = e
-      .select($"vec_id".as("doc_id"), $"embedding")
-      .join(broadcast(cands), Seq("doc_id"))
-      .join(
-        broadcast(
-          e.filter($"vec_id" < maxQueryId).select($"vec_id".as("query_id"), $"embedding".as("qe"))),
-        Seq("query_id"))
-      .select($"query_id", $"doc_id", graft.Functions.vecDot($"qe", $"embedding").as("score"))
-    BruteForce.rerank(rescored, k)
-  }
-
   // ---------------------------------------------------------------- v01
   /** F8: L2 norms of all embeddings (the normalize-once trick's input,
     * `004:193-196`). */

@@ -6,8 +6,8 @@ import graft.operators.Compact
 
 /** v34 binary (sign-bit) quantization and v35 MRL prefix search: packed
   * popcount kernel vs naive semantics, end-to-end equivalence to an
-  * in-test two-stage reimplementation on the fixture, and the
-  * no-cartesian plan contract. */
+  * in-test two-stage reimplementation on the fixture, and the plan
+  * contract: one scan and one driver-merged top-k, no join. */
 class CompactSpec extends SparkSpec {
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf0001)
@@ -87,12 +87,38 @@ class CompactSpec extends SparkSpec {
     assert(frameSet(q("v35_mrl_prefix")) == naive)
   }
 
+  /** v34's and v35's executed plans, each after a collect so AQE has
+    * settled. */
+  private def plans = Seq("v34_binary_topk", "v35_mrl_prefix").map { name =>
+    val df = q(name)
+    df.collect()
+    name -> df.queryExecution.executedPlan
+  }
+
+  private def nodes(plan: org.apache.spark.sql.execution.SparkPlan) =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) { case p => p }
+
+  // The candidates no longer join back to the float corpus: the bounded
+  // per-call state (queries, scorer tables) ships to the scan in one
+  // broadcast and the candidates merge on the driver, so neither side is
+  // ever shuffled against the corpus.
   test("v34/v35 plans: no cartesian, no nested-loop join; candidates broadcast") {
-    Seq("v34_binary_topk", "v35_mrl_prefix").foreach { name =>
-      val plan = q(name).queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"), s"$name has a cartesian")
-      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name has a nested-loop join")
-      assert(plan.contains("BroadcastHashJoin"), s"$name rescore is not a broadcast join")
+    plans.foreach { case (name, plan) =>
+      val text = plan.toString
+      assert(!text.contains("CartesianProduct"), s"$name has a cartesian")
+      assert(!text.contains("BroadcastNestedLoopJoin"), s"$name has a nested-loop join")
+      val exchanges = nodes(plan).collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }
+      assert(exchanges.isEmpty, s"$name shuffles:\n$plan")
+    }
+  }
+
+  test("v34/v35 plans: no join of any kind; one PerQueryTopKExec") {
+    plans.foreach { case (name, plan) =>
+      val ns = nodes(plan)
+      val joins = ns.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+      assert(joins.isEmpty, s"$name joins:\n$plan")
+      assert(ns.count(_.isInstanceOf[graft.plans.PerQueryTopKExec]) == 1, s"$name:\n$plan")
     }
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.functions.TopKAgg
-import graft.operators.{Ann, BruteForce, Pq}
+import graft.operators.{Ann, BruteForce, Pq, QuantScan}
 import graft.plans.{CosineTopK, PerQueryTopK, PerQueryTopKExec}
 
 /** [[PerQueryTopK]] is the shuffle-free tail of every served search. It
@@ -102,7 +102,10 @@ class PerQueryTopKSpec extends SparkSpec {
         (0, 10, 4, Pq.RCand, None))
     } {
       val src = pred.foldLeft(frame.repartition(parts))(_ filter _)
-      val cands = Pq.fusedCandidates(src, cb, cents, queries(nq), nProbe)
+      val qs = queries(nq)
+      val probes = Ann.probeLists(qs, cents, nProbe)
+      val cands = QuantScan.candidates(src, Pq.adcScorer(qs, cb, Some(probes.dots)), qs,
+        Some(probes), Pq.RCand)
       val shape = s"pq partitions=$parts queries=$nq k=$k nProbe=$nProbe rcand=$rcand " +
         s"pred=${pred.isDefined}"
       assertSame(PerQueryTopK.of(cands, k, rcand), PerQueryTopKSpec.groupMerge(cands, k, rcand), shape)

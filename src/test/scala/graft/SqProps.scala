@@ -41,9 +41,13 @@ object SqProps extends Properties("Sq") {
           (codes(i) & 0xFF) >= 0 && (codes(i) & 0xFF) <= Sq.Levels
         }
       } && {
-        val adc = Sq.adcCandidates(
-            Sq.encode(corpus, lo, hi), lo, hi, Array((9999L, qv)))
-          .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("approx")).toMap
+        // the kernel's SQ8 scorer, one row at a time
+        val scorer = Sq.scorer(Array((9999L, qv)), lo, hi)
+        val adc = enc.map { case (id, codes) =>
+          val out = new Array[Double](1)
+          scorer.score(codes, 0L, Array(0), out)
+          id -> out(0)
+        }
         adc.forall { case (id, approx) =>
           val v = byId(id)
           var exact = 0.0

@@ -15,8 +15,9 @@ import graft.operators.{Ann, VectorSearch}
   * centroids once per (session, dir, C, fingerprint). These tests pin
   * that the memo never serves stale inputs, that warm TVF expansions
   * run no per-call inference or centroid job (and a warm `cosine_topk`,
-  * `ann_search` or `ivfpq_search` call no more than two jobs in all, as
-  * one [[graft.plans.PerQueryTopKExec]] with no shuffle), and that the
+  * `ann_search`, `ivfpq_search` or `ivfsq_search` call no more than two
+  * jobs in all, as one [[graft.plans.PerQueryTopKExec]] with no shuffle;
+  * `binary_search` one more, for its projection and sort), and that the
   * entries die with their session. */
 class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
@@ -199,6 +200,29 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       s2.sql(pq).collect() // warm up: trains, encodes and caches the frame
       val n = jobsDuring(s2.sql(pq).collect())
       assert(n <= 2, s"$n jobs for a warm $pq call (bound 2)")
+    }
+  }
+
+  test("a warm ivfsq_search call runs at most 2 jobs") {
+    countingJobs { (s2, jobsDuring) =>
+      // the query collect at expansion, then one pass over the probed
+      // lists (byte ADC plus exact rescore); the merge is on the driver
+      val sq = s"SELECT * FROM ivfsq_search('$sf0001', 1, 10, 8)"
+      s2.sql(sq).collect() // warm up: trains, encodes and caches the frame
+      val n = jobsDuring(s2.sql(sq).collect())
+      assert(n <= 2, s"$n jobs for a warm $sq call (bound 2)")
+    }
+  }
+
+  test("a warm binary_search call runs at most 3 jobs") {
+    countingJobs { (s2, jobsDuring) =>
+      // the query collect at expansion, one scan (Hamming plus exact
+      // rescore), and one more for the (query_id, rnk, doc_id) projection
+      // and sort above the driver merge
+      val bin = s"SELECT * FROM binary_search('$sf0001', 1, 10, 50)"
+      s2.sql(bin).collect()
+      val n = jobsDuring(s2.sql(bin).collect())
+      assert(n <= 3, s"$n jobs for a warm $bin call (bound 3)")
     }
   }
 
